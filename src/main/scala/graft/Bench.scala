@@ -242,10 +242,14 @@ object Bench {
     // stop the session, THEN print — nothing may follow. The run is
     // forked with outputStrategy = StdoutOutput (build.sbt) so the
     // line arrives unprefixed, and showSuccess=false drops sbt's
-    // trailing "[success]" line.
+    // trailing "[success]" line. A failing stop must not cost the
+    // contract line: it is reported on stderr and the line still
+    // prints.
     try spark.sparkContext.setLogLevel("ERROR")
     catch { case _: Throwable => () }
-    spark.stop()
+    try spark.stop()
+    catch { case e: Throwable =>
+      System.err.println(s"[bench] spark.stop() failed: $e") }
     println(stdoutLine)
     System.out.flush()
   }

@@ -6,7 +6,7 @@ import graft.operators.SimilaritySearch
 /** Segment-level plan dumps for claims whose REGISTERED plans are
   * checkpoint-hidden (r14 verdict item 9): prints `.explain` of the
   * pipeline segments the optimization claims touch — today the IVF
-  * k-NN list build (the probeCells/attachCells assignment segment
+  * k-NN list build (the attachCells assignment segment
   * inside every q305/q329–q332 candidate device, which sits behind
   * the gate's eager checkpoints in the registered plans).
   * Usage: runMain graft.SegExplain [sfDir]

@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.types._
+import graft.operators.TopK
 
 /** Per-row bounded top-p nearest-cell selection over a PACKED centroid
   * table (the IVF coarse-assignment kernel, r15 guide §2.4: remove the
@@ -26,8 +27,8 @@ import org.apache.spark.sql.types._
   * [[DotF64]] sequential fold, the same operand order as the window
   * form's `dotF64(v, c) / (l2Norm(v) * cnorm)`. Ranking compares
   * (score desc, cell_id asc) under the SAME ordering Spark's window
-  * sort uses for DoubleType (nanSafeCompareDoubles: NaN greatest,
-  * -0.0 == 0.0 a tie), so the selected
+  * sort uses for DoubleType ([[TopK.scoreOrder]]:
+  * NaN first under desc, -0.0 == 0.0 a tie), so the selected
   * cells and their order are bit-identical to the
   * `row_number().over(orderBy(desc(score), cell_id))` formulation
   * (CellKernelSpec pins kernel ≡ window on random, tied, ±0.0 and
@@ -99,33 +100,11 @@ object TopCells {
         .lit(p))))
   }
 
-  /** Spark's sort comparison for DoubleType
-    * (Utils.nanSafeCompareDoubles, inlined — it is private[spark]):
-    * NaN greatest, and -0.0 == 0.0 ties via IEEE `==` (java
-    * Double.compare would order -0.0 < 0.0 — NOT what the window sort
-    * does). */
-  private def cmpScore(x: Double, y: Double): Int = {
-    val xn = java.lang.Double.isNaN(x)
-    val yn = java.lang.Double.isNaN(y)
-    if ((xn && yn) || (x == y)) 0
-    else if (xn) 1
-    else if (yn) -1
-    else if (x > y) 1 else -1
-  }
-
-  /** (score desc, cell_id asc) strictly-better test — exactly the
-    * window's `orderBy(desc(score), cell_id)` order, NaN (ranked
-    * first under desc) and ±0.0 (a tie) included. */
-  private def better(s1: Double, c1: Long, s2: Double,
-      c2: Long): Boolean = {
-    val sc = cmpScore(s1, s2)
-    sc > 0 || (sc == 0 && c1 < c2)
-  }
-
-  /** The kernel: one pass over the packed cells, bounded
-    * insertion-sorted (score, cell_id) list of size ≤ p, best first.
-    * O(cells·(dim + p)) per row, zero allocation beyond the two
-    * p-sized scratch arrays and the result. */
+  /** The kernel: one pass over the packed cells into the shared
+    * bounded top-k buffer ([[TopK.TopKBuf]], (score desc, cell_id asc)
+    * under [[TopK.scoreOrder]]) of size ≤ p, best first.
+    * O(cells·(dim + p)) per row, zero allocation beyond the p-sized
+    * buffer and the result. */
   def topCells(vec: ArrayData, cells: ArrayData, p: Int,
       vecIsFloat: Boolean): ArrayData = {
     val dim = vec.numElements()
@@ -143,15 +122,11 @@ object TopCells {
     val vnorm = math.sqrt(self)
     val nCells = cells.numElements()
     val keep = math.min(p, nCells)
-    val scores = new Array[Double](keep)
-    val ids = new Array[Long](keep)
-    var count = 0
+    val best = new TopK.TopKBuf(keep)
     var j = 0
     while (j < nCells) {
       val cell = cells.getStruct(j, 3)
-      val cid = cell.getLong(0)
       val cent = cell.getArray(1)
-      val cnorm = cell.getDouble(2)
       val n = math.min(dim, cent.numElements())
       var dot = 0.0
       var k = 0
@@ -162,25 +137,10 @@ object TopCells {
       } else {
         while (k < n) { dot += vec.getDouble(k) * cent.getDouble(k); k += 1 }
       }
-      val score = dot / (vnorm * cnorm)
-      if (count < keep) {
-        // insert into the sorted prefix
-        var pos = count
-        while (pos > 0 && better(score, cid, scores(pos - 1), ids(pos - 1))) {
-          scores(pos) = scores(pos - 1); ids(pos) = ids(pos - 1); pos -= 1
-        }
-        scores(pos) = score; ids(pos) = cid; count += 1
-      } else if (better(score, cid, scores(keep - 1), ids(keep - 1))) {
-        var pos = keep - 1
-        while (pos > 0 && better(score, cid, scores(pos - 1), ids(pos - 1))) {
-          scores(pos) = scores(pos - 1); ids(pos) = ids(pos - 1); pos -= 1
-        }
-        scores(pos) = score; ids(pos) = cid
-      }
+      TopK.insert(best, keep, dot / (vnorm * cell.getDouble(2)),
+        cell.getLong(0), dedup = false)
       j += 1
     }
-    val out = new Array[Long](count)
-    System.arraycopy(ids, 0, out, 0, count)
-    new GenericArrayData(out)
+    new GenericArrayData(java.util.Arrays.copyOf(best.ids, best.n))
   }
 }

@@ -18,7 +18,7 @@ import graft.functions.VectorFunctions.{dotF64, l2Norm}
   * ONE self-join for neighbor-of-neighbor candidates (bounded by
   * (2k)² per node — the paper's B[v]×B[v] join, here without the
   * ρ-sampling knob since k is small), two embedding lookups to
-  * score, and a per-node top-k window. All keyed shuffles, no
+  * score, and a per-node bounded top-k heap. All keyed shuffles, no
   * cartesian, no driver state beyond one bounded count;
   * `localCheckpoint` cuts lineage between rounds (swap for reliable
   * checkpoint on a cluster, as in [[Graph]]).
@@ -31,6 +31,9 @@ import graft.functions.VectorFunctions.{dotF64, l2Norm}
   * init ranking comes from [[Corpus.globalRank]] (range-partitioned
   * two-pass zipWithIndex) — identical ranks to `row_number() OVER
   * (ORDER BY id)` with NO single-partition sort at any scale.
+  *
+  * Ids must be integral (checked at entry; they ride the
+  * [[TopK.perQueryDedup]] long buffer).
   *
   * Output: (u, v, score, rnk) — directed k-NN lists, rnk 1..k. */
 object NnDescent {
@@ -48,9 +51,11 @@ object NnDescent {
   /** Pseudo-random (hash-derived) initial k-NN guess, scored. */
   def initGraph(emb: DataFrame, idCol: String, vecCol: String,
       k: Int = 6): DataFrame = {
+    TopK.requirePositive("k" -> k)
+    TopK.requireIntegralId(emb, idCol)
     val v = vecs(emb, idCol, vecCol)
     val n = v.count()
-    require(n >= 2 && k >= 1 && k < n,
+    require(n >= 2 && k < n,
       s"need 2 <= k+1 <= n (k=$k, n=$n)")
     val idx = denseIndex(v)
     val edges = idx
@@ -61,14 +66,14 @@ object NnDescent {
           % lit(n - 1)) % lit(n))
       .join(idx.select(col("i").as("ti"), col("id").as("v")), "ti")
       .select(col("id").as("u"), col("v"))
-    // duplicate (u, v) draws collapse inside score() (the dedup-heap
-    // top-k, or an explicit distinct on the window fallback)
+    // duplicate (u, v) draws collapse inside score()'s dedup heap
     score(edges, v, k)
   }
 
   /** One NN-descent refinement round over a scored graph. */
   def refine(graph: DataFrame, emb: DataFrame, idCol: String,
       vecCol: String, k: Int = 6): DataFrame = {
+    TopK.requireIntegralId(emb, idCol)
     val v = vecs(emb, idCol, vecCol)
     // The undirected closure is a TINY id-pair frame (n·2k rows), but
     // it seeds the round's dominant compute: the neighbor-of-neighbor
@@ -97,7 +102,10 @@ object NnDescent {
     score(cand.union(graph.select(col("u"), col("v"))), v, k)
   }
 
-  /** Init + `iters` refinement rounds. */
+  /** Init + `iters` refinement rounds. `idCol` must be integral and
+    * `k` ≥ 1 (checked at entry; string ids go through
+    * [[SimilaritySearch.bruteForceTopKHeap]]). Rows with a NULL
+    * vector are filtered out first: they are never a node. */
   def knnGraph(emb: DataFrame, idCol: String, vecCol: String,
       k: Int = 6, iters: Int = 2): DataFrame = {
     require(iters >= 0, s"iters >= 0 ($iters)")
@@ -221,9 +229,11 @@ object NnDescent {
         col("rnk").cast("long").as("rnk"))
   }
 
+  /** (id, e) per row; a NULL-vector row is filtered out and is never
+    * a node (the IVF operators' NULL-vector policy). */
   private def vecs(emb: DataFrame, idCol: String,
       vecCol: String): DataFrame =
-    emb.select(col(idCol).as("id"),
+    emb.filter(col(vecCol).isNotNull).select(col(idCol).as("id"),
       col(vecCol).cast("array<double>").as("e"))
 
   /** Score a candidate edge stream (duplicates allowed) and keep the
@@ -232,46 +242,26 @@ object NnDescent {
     *    re-derived both norms inside every candidate (3 dots instead
     *    of 1 on the O(n·k²) stream); same expressions, same divisor
     *    product order, bit-identical scores;
-    *  - integral ids take the DEDUP-HEAP top-k ([[TopK.perQueryDedup]]
-    *    — map-side partial, duplicates collapse in-heap because a
-    *    duplicate pair's score is deterministic): SegProbe r14
-    *    measured the old distinct-then-ranked-window chain at ~50 s
-    *    CPU per refinement round at sf0.1 vs ~1 s of dot products.
-    *    Non-integral ids keep the distinct+window form (identical
-    *    values; TopKSpec pins heap≡window ordering). */
+    *  - the DEDUP-HEAP top-k ([[TopK.perQueryDedup]] — map-side
+    *    partial, duplicates collapse in-heap because a duplicate
+    *    pair's score is deterministic): SegProbe r14 measured the old
+    *    distinct-then-ranked-window chain at ~50 s CPU per refinement
+    *    round at sf0.1 vs ~1 s of dot products. */
   private def score(edges: DataFrame, v: DataFrame,
       k: Int): DataFrame = {
     val idType = v.schema("id").dataType
-    val integral = idType match {
-      case org.apache.spark.sql.types.ByteType |
-        org.apache.spark.sql.types.ShortType |
-        org.apache.spark.sql.types.IntegerType |
-        org.apache.spark.sql.types.LongType => true
-      case _ => false
-    }
     val vn = v.select(col("id"), col("e"), l2Norm(col("e")).as("n2"))
-    def attach(e: DataFrame): DataFrame = e
+    val scored = edges
       .join(vn.select(col("id").as("u"), col("e").as("ue"),
         col("n2").as("un")), "u")
       .join(vn.select(col("id").as("v"), col("e").as("ve"),
         col("n2").as("vn")), "v")
-      .withColumn("score",
-        dotF64(col("ue"), col("ve")) / (col("un") * col("vn")))
-    if (integral)
-      TopK.perQueryDedup(
-          attach(edges).select(col("u").as("qid"),
-            col("v").as("id"), col("score")), k)
-        .select(col("qid").cast(idType).as("u"),
-          col("cid").cast(idType).as("v"), col("score"),
-          col("rnk").cast("long").as("rnk"))
-    else {
-      val w = Window.partitionBy(col("u"))
-        .orderBy(col("score").desc, col("v"))
-      attach(edges.distinct())
-        .withColumn("rnk", row_number().over(w))
-        .filter(col("rnk") <= k)
-        .select(col("u"), col("v"), col("score"),
-          col("rnk").cast("long").as("rnk"))
-    }
+      .select(col("u").as("qid"), col("v").as("id"),
+        (dotF64(col("ue"), col("ve")) / (col("un") * col("vn")))
+          .as("score"))
+    TopK.perQueryDedup(scored, k)
+      .select(col("qid").cast(idType).as("u"),
+        col("cid").cast(idType).as("v"), col("score"),
+        col("rnk").cast("long").as("rnk"))
   }
 }

@@ -143,11 +143,7 @@ object ProductQuantization {
       .withColumn("score",
         dotF64(col("qvec"), col("cvec")) / (col("qnorm") * col("cnorm")))
       .select(col("qid"), col("cid").as("id"), col("score"))
-    corpus.schema(corpusIdCol).dataType match {
-      case org.apache.spark.sql.types.StringType =>
-        TopK.perQueryStr(scored, k)
-      case _ => TopK.perQuery(scored, k)
-    }
+    TopK.perQuery(scored, k)
   }
 
   /** The production PQ shape: ADC builds a shortlist of

@@ -63,11 +63,7 @@ object SimilaritySearch {
       .withColumn("score",
         dotF64(col("qvec"), col("cvec")) / (col("qnorm") * col("cnorm")))
       .select(col("qid"), col("id"), col("score"))
-    corpus.schema(corpusIdCol).dataType match {
-      case org.apache.spark.sql.types.StringType =>
-        TopK.perQueryStr(scored, k)
-      case _ => TopK.perQuery(scored, k)
-    }
+    TopK.perQuery(scored, k)
   }
 
   /** All corpus pairs with cosine similarity above `threshold` — the
@@ -127,11 +123,7 @@ object SimilaritySearch {
       .withColumn("score",
         dotF64(col("qvec"), col("cvec")) / (col("qnorm") * col("cnorm")))
       .select(col("qid"), col("id"), col("score"))
-    corpus.schema(corpusIdCol).dataType match {
-      case org.apache.spark.sql.types.StringType =>
-        TopK.perQueryStr(scored, k)
-      case _ => TopK.perQuery(scored, k)
-    }
+    TopK.perQuery(scored, k)
   }
 
   /** Metadata-filtered top-k (reference: Qdrant filtered search —
@@ -329,11 +321,7 @@ object SimilaritySearch {
         dotI8(col("q_qvec"), col("c_qvec")).cast("double")
           / (col("q_qnorm") * col("c_qnorm")))
       .select(col("qid"), col("id"), col("score"))
-    corpus.schema(corpusIdCol).dataType match {
-      case org.apache.spark.sql.types.StringType =>
-        TopK.perQueryStr(scored, k)
-      case _ => TopK.perQuery(scored, k)
-    }
+    TopK.perQuery(scored, k)
   }
 
   /** Deterministic Rademacher hyperplane sign: ±1 from the first hex
@@ -531,10 +519,18 @@ object SimilaritySearch {
     * standalone step): each row gets the cell whose centroid has the
     * highest cosine to its vector, ties broken by cell_id. Centroids
     * ride a broadcast; the assignment is a map-side argmax per row —
-    * at 100 TB this is a map-only pass over the corpus. */
+    * at 100 TB this is a map-only pass over the corpus.
+    *
+    * Contract (shared by [[ivfTopK]] and [[ivfKnnLists]]): `idCol`
+    * and the centroids' `cell_id` must be integral
+    * ([[TopK.requireIntegralId]]; string ids go through
+    * [[bruteForceTopKHeap]]), and rows with a NULL vector are
+    * filtered out before cell assignment. */
   def assignCells(df: DataFrame, idCol: String, vecCol: String,
-      centroids: DataFrame): DataFrame =
-    attachCells(df, idCol, vecCol, centroids, 1)
+      centroids: DataFrame): DataFrame = {
+    TopK.requireIntegralId(df, idCol)
+    attachCells(df, vecCol, centroids, 1)
+  }
 
   /** IVF-style ANN: coarse-quantize the corpus to `centroids` (a small
     * DataFrame of (cell_id, centroid)), then search only the `nProbe`
@@ -542,162 +538,100 @@ object SimilaritySearch {
     * probe); the fine scan joins corpus cells to query probes on
     * cell_id — a hash join on a low-cardinality key instead of a full
     * cross product. Recall < 1.0 by construction; the brute-force scan
-    * above is the exactness oracle. */
+    * above is the exactness oracle.
+    *
+    * Ids and `cell_id` must be integral and `k`, `nProbe` ≥ 1
+    * (checked at entry; string ids go through [[bruteForceTopKHeap]]).
+    * Rows with a NULL vector are filtered out before cell assignment:
+    * a NULL-vector corpus row is never a hit and a NULL-vector query
+    * returns no rows. */
   def ivfTopK(queries: DataFrame, queryIdCol: String, corpus: DataFrame,
       corpusIdCol: String, vecCol: String, centroids: DataFrame,
       k: Int, nProbe: Int = 2): DataFrame =
     ivfFineScan(queries, queryIdCol, corpus, corpusIdCol, vecCol,
       centroids, k, nProbe, broadcastQueries = true)
 
-  /** Nearest-`probes`-cells assignment under `centroids` (broadcast;
-    * ties break on cell_id) — shared by [[ivfTopK]] and
-    * [[ivfKnnLists]]. */
-  private def probeCells(df: DataFrame, idC: String, vecCol: String,
-      centroids: DataFrame, probes: Int): DataFrame =
-    attachCells(df, idC, vecCol, centroids, probes)
-
-  /** The shared cell-ranking core of [[assignCells]]/[[probeCells]].
-    * r15 shape (guide §2.4, remove the exchange outright): the
-    * centroid table — bounded by design ([[coarseCellCount]] caps) —
-    * is packed into ONE broadcast row of (cell_id, centroid, cnorm)
-    * structs, and each row picks its top-`probes` cells with the
+  /** The shared cell-ranking core of [[assignCells]] and the IVF fine
+    * scan: each row with a non-NULL vector gets its top-`probes`
+    * cells under `centroids` (ties break on cell_id), one output row
+    * per cell. r15 shape (guide §2.4, remove the exchange outright):
+    * the centroid table — bounded by design ([[coarseCellCount]]
+    * caps) — is packed into ONE broadcast row of (cell_id, centroid,
+    * cnorm) structs, and each row picks its cells with the
     * [[graft.functions.TopCells]] codegen kernel ON the row: no
     * ranking window, no exchange, no re-attach join — a map-only
-    * pass at any scale. (The r14 shape ranked skinny (id, cell,
-    * score) rows through a `row_number()` window — still one full
-    * n×cells exchange + sort per assignment plus a keyed join to
-    * re-attach the payload.)
+    * pass at any scale.
     *
     * Value parity: the kernel computes the same sequential-fold
     * scores (dot/(rnorm·cnorm), [[dotF64]] order) and ranks by the
-    * same (score desc, cell_id asc) total order as the window
-    * (CellKernelSpec pins kernel ≡ window, ties included); explode
-    * yields exactly the rows the window's `_crnk <= probes` filter
-    * kept. Non-integral cell ids keep the window form (identical
-    * values).
+    * same (score desc, cell_id asc) order as a ranked window
+    * (CellKernelSpec pins kernel ≡ window, ties and ±0.0 included).
     *
     * Narrow scans still fan out first (the one-parquet-split corpus
     * would otherwise score n×cells pairs on one core;
     * fanOutForCompute is a no-op once the scan splits naturally). */
-  private def attachCells(df: DataFrame, idC: String, vecCol: String,
+  private def attachCells(df: DataFrame, vecCol: String,
       centroids: DataFrame, probes: Int): DataFrame = {
-    val base = graft.GraftSession.fanOutForCompute(df)
-    val cellIdType = centroids.schema("cell_id").dataType
-    val integralCell = cellIdType match {
-      case org.apache.spark.sql.types.ByteType |
-        org.apache.spark.sql.types.ShortType |
-        org.apache.spark.sql.types.IntegerType |
-        org.apache.spark.sql.types.LongType => true
-      case _ => false
-    }
-    if (integralCell) {
-      // cell_id rides as long through the kernel and casts back —
-      // lossless for integral types (the TopK.perQueryDedup device)
-      val packed = centroids.agg(array_sort(collect_list(struct(
-        col("cell_id").cast("long").as("cell_id"),
-        col("centroid").cast("array<double>").as("centroid"),
-        l2Norm(col("centroid")).as("cnorm")))).as("_cells"))
-      base.crossJoin(broadcast(packed))
-        .withColumn("_pick", explode(graft.functions.TopCells.of(
-          col(vecCol), col("_cells"), probes)))
-        .withColumn("cell_id", col("_pick").cast(cellIdType))
-        .drop("_cells", "_pick")
-    } else {
-      val cellW = Window.partitionBy(col("_rid")).orderBy(
-        desc("_cscore"), col("cell_id"))
-      val cn = centroids.withColumn("_cnorm", l2Norm(col("centroid")))
-      val picks = base
-        .select(col(idC).as("_rid"), col(vecCol).as("_v"))
-        .withColumn("_rnorm", l2Norm(col("_v")))
-        .crossJoin(broadcast(cn))
-        .select(col("_rid"), col("cell_id"),
-          (dotF64(col("_v"), col("centroid")) /
-            (col("_rnorm") * col("_cnorm"))).as("_cscore"))
-        .withColumn("_crnk", row_number().over(cellW))
-        .filter(col("_crnk") <= probes)
-        .select(col("_rid"), col("cell_id"))
-      base.join(picks, base(idC) === picks("_rid")).drop("_rid")
-    }
+    TopK.requireIntegralId(centroids, "cell_id")
+    graft.GraftSession.fanOutForCompute(df.filter(col(vecCol).isNotNull))
+      .crossJoin(broadcast(packCells(centroids)))
+      .withColumn("_pick", explode(graft.functions.TopCells.of(
+        col(vecCol), col("_cells"), probes)))
+      .withColumn("cell_id",
+        col("_pick").cast(centroids.schema("cell_id").dataType))
+      .drop("_cells", "_pick")
   }
 
+  /** The centroid table as ONE row: `_cells`, the cell_id-sorted
+    * (cell_id LONG, centroid, cnorm) structs [[graft.functions.TopCells]]
+    * reads. cell_id rides as long through the kernel; callers cast
+    * the picks back. */
+  private def packCells(centroids: DataFrame): DataFrame =
+    centroids.agg(array_sort(collect_list(struct(
+      col("cell_id").cast("long").as("cell_id"),
+      col("centroid").cast("array<double>").as("centroid"),
+      l2Norm(col("centroid")).as("cnorm")))).as("_cells"))
+
   /** The IVF fine scan: probe-cell assignment on both sides, join
-    * on cell_id, per-query top-k. `broadcastQueries` picks the join
+    * on cell_id, per-query top-k through the dedup heap
+    * ([[TopK.perQueryDedup]]). `broadcastQueries` picks the join
     * strategy: broadcast for a handful of probes ([[ivfTopK]]),
     * keyed shuffle when the query set is corpus-sized
     * ([[ivfKnnLists]]). `corpusAssign` > 1 posts each corpus vector
     * to its that-many nearest cells (multi-assignment — the classic
     * IVF recall lever for cell-boundary vectors: a true neighbor
     * whose home cell the query missed is still found through its
-    * second cell), at corpusAssign× fine-scan volume; duplicate
-    * (qid, cid) pairs surfacing through several shared cells are
-    * deduped before ranking so one neighbor can't occupy two of
-    * the k slots. */
+    * second cell), at corpusAssign× fine-scan volume; a (qid, cid)
+    * pair surfacing through several shared cells has one
+    * deterministic score, so the heap collapses the duplicates and
+    * one neighbor can't occupy two of the k slots. */
   private def ivfFineScan(queries: DataFrame, queryIdCol: String,
       corpus: DataFrame, corpusIdCol: String, vecCol: String,
       centroids: DataFrame, k: Int, nProbe: Int,
       broadcastQueries: Boolean, corpusAssign: Int = 1): DataFrame = {
+    TopK.requirePositive("k" -> k, "nProbe" -> nProbe,
+      "corpusAssign" -> corpusAssign)
+    TopK.requireIntegralId(queries, queryIdCol)
+    TopK.requireIntegralId(corpus, corpusIdCol)
     // side norms once per (row, cell) assignment — never per scored
     // pair (the [[bruteForceTopK]] discipline); bit-identical scores
-    val corpusCells = probeCells(corpus, corpusIdCol, vecCol,
-        centroids, corpusAssign)
+    val corpusCells = attachCells(corpus, vecCol, centroids, corpusAssign)
       .select(col(corpusIdCol).as("cid"), col(vecCol).as("cvec"),
         l2Norm(col(vecCol)).as("cn"), col("cell_id"))
-    val queryCells = probeCells(queries, queryIdCol, vecCol,
-        centroids, nProbe)
+    val queryCells = attachCells(queries, vecCol, centroids, nProbe)
       .select(col(queryIdCol).as("qid"), col(vecCol).as("qvec"),
         l2Norm(col(vecCol)).as("qn"), col("cell_id"))
     val joined =
       if (broadcastQueries)
         corpusCells.join(broadcast(queryCells), Seq("cell_id"))
       else corpusCells.join(queryCells, Seq("cell_id"))
-    val scored = joined.withColumn("score",
-      dotF64(col("qvec"), col("cvec")) / (col("qn") * col("cn")))
-    def integral(t: org.apache.spark.sql.types.DataType): Boolean =
-      t match {
-        case org.apache.spark.sql.types.ByteType |
-          org.apache.spark.sql.types.ShortType |
-          org.apache.spark.sql.types.IntegerType |
-          org.apache.spark.sql.types.LongType => true
-        case _ => false
-      }
-    val qType = queries.schema(queryIdCol).dataType
-    val cType = corpus.schema(corpusIdCol).dataType
-    if (corpusAssign > 1 && integral(qType) && integral(cType))
-      // multi-assignment can surface the same (qid, cid) through
-      // several shared cells — the DEDUP-HEAP top-k collapses the
-      // duplicates in-heap (a duplicate pair's score is
-      // deterministic, the [[TopK.perQueryDedup]] contract), so no
-      // distinct over the candidate stream and no ranked window; the
-      // old shape hashed the full vector payloads through a distinct
-      // exchange and then sorted the stream (guide §2.3)
-      TopK.perQueryDedup(scored.select(col("qid"),
-          col("cid").as("id"), col("score")), k)
-        .select(col("qid").cast(qType).as("qid"),
-          col("cid").cast(cType).as("cid"), col("score"), col("rnk"))
-    else {
-      val w = Window.partitionBy(col("qid"))
-        .orderBy(desc("score"), col("cid"))
-      val pairs =
-        // non-integral ids: dedupe on BARE id pairs and re-attach the
-        // vectors by keyed join (never a distinct over the payloads)
-        if (corpusAssign > 1) {
-          val idPairs = scored.select(col("qid"), col("cid")).distinct()
-          val qVecs = queries.select(col(queryIdCol).as("qid"),
-            col(vecCol).as("qvec"), l2Norm(col(vecCol)).as("qn"))
-          val cVecs = corpus.select(col(corpusIdCol).as("cid"),
-            col(vecCol).as("cvec"), l2Norm(col(vecCol)).as("cn"))
-          val withQ = if (broadcastQueries)
-            idPairs.join(broadcast(qVecs), "qid")
-          else idPairs.join(qVecs, "qid")
-          withQ.join(cVecs, "cid")
-            .withColumn("score",
-              dotF64(col("qvec"), col("cvec")) / (col("qn") * col("cn")))
-        } else scored
-      pairs
-        .withColumn("rnk", row_number().over(w))
-        .filter(col("rnk") <= k)
-        .select(col("qid"), col("cid"), col("score"), col("rnk"))
-    }
+    TopK.perQueryDedup(joined.select(col("qid"), col("cid").as("id"),
+        (dotF64(col("qvec"), col("cvec")) / (col("qn") * col("cn")))
+          .as("score")), k)
+      .select(
+        col("qid").cast(queries.schema(queryIdCol).dataType).as("qid"),
+        col("cid").cast(corpus.schema(corpusIdCol).dataType).as("cid"),
+        col("score"), col("rnk"))
   }
 
   /** Random-SAMPLE coarse quantizer: the `cells` smallest-id
@@ -728,7 +662,11 @@ object SimilaritySearch {
     * O(n^1.5) total fine-scan pairs vs the exact form's n², and
     * every shuffle is keyed (cell_id, qid); nothing corpus-sized
     * ever broadcasts or collects. Returns (qid, cid, score, rnk),
-    * rnk 1..k per qid. */
+    * rnk 1..k per qid.
+    *
+    * Same contract as [[ivfTopK]]: integral ids and `cell_id`,
+    * `k`, `nProbe` and `corpusAssign` ≥ 1 (checked at entry), and
+    * NULL-vector rows filtered out before cell assignment. */
   def ivfKnnLists(queries: DataFrame, queryIdCol: String,
       corpus: DataFrame, corpusIdCol: String, vecCol: String,
       centroids: DataFrame, k: Int, nProbe: Int = 2,
@@ -852,14 +790,10 @@ object SimilaritySearch {
       // the assignment is a map-only pass per iteration. Scores and
       // the (score desc, cell_id asc) tie-break are bit-identical to
       // the window form (CellKernelSpec).
-      val cellT = cents.schema("cell_id").dataType
-      val packed = cents.agg(array_sort(collect_list(struct(
-        col("cell_id").cast("long").as("cell_id"),
-        col("centroid").cast("array<double>").as("centroid"),
-        l2Norm(col("centroid")).as("cnorm")))).as("_cells"))
-      val assigned = v.crossJoin(broadcast(packed))
+      val assigned = v.crossJoin(broadcast(packCells(cents)))
         .withColumn("cell_id", element_at(graft.functions.TopCells.of(
-          col("v"), col("_cells"), 1), 1).cast(cellT))
+          col("v"), col("_cells"), 1), 1)
+          .cast(cents.schema("cell_id").dataType))
         .select(col("cell_id"), col("_id"), col("v"))
       val updated = assigned
         .select(col("cell_id"), col("_id"), posexplode(col("v")))
@@ -1047,16 +981,24 @@ object SimilaritySearch {
     *       (graphK, graphIters).
     * Measured at sf0.001 (r11 sweep): union recall 0.987 vs the
     * exact mutual-best pairs, IVF alone 0.584, NN-descent alone
-    * 0.909. Requires a numeric id column (the parity split). */
+    * 0.909. Requires an integral id column (the parity split and
+    * the IVF/NN-descent contract); `listK`, `nProbe`, `graphK` and
+    * `corpusAssign` must be ≥ 1. */
   def parityMarginCandidates(emb: DataFrame, idCol: String,
       vecCol: String, listK: Int = 8, nProbe: Int = 4,
       graphK: Int = 12, graphIters: Int = 3,
       cellsOf: Long => Int = coarseCellCount(_),
       probesOf: Long => Int = _ => 0,
-      corpusAssign: Int = 1): DataFrame =
+      corpusAssign: Int = 1): DataFrame = {
+    // nProbe is also the count probesOf falls back to
+    TopK.requirePositive("listK" -> listK, "nProbe" -> nProbe,
+      "graphK" -> graphK, "corpusAssign" -> corpusAssign)
+    require(graphIters >= 0, s"graphIters must be >= 0 ($graphIters)")
+    TopK.requireIntegralId(emb, idCol)
     ivfParityCandidates(emb, idCol, vecCol, listK, nProbe, cellsOf,
       probesOf, corpusAssign, emb.count())
       .union(parityGraphEdges(emb, idCol, vecCol, graphK, graphIters))
+  }
 
   /** The IVF leg of [[parityMarginCandidates]] — the two directed
     * k-NN lists, as (lid, rid) cross-parity pairs. Factored out so

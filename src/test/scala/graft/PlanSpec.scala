@@ -169,4 +169,28 @@ class PlanSpec extends SparkTestBase {
     // bounded-heap top-k shape survives
     assert(p.contains("ObjectHashAggregate"))
   }
+
+  test("IVF top-k, cell assignment and IVF k-NN lists (corpusAssign " +
+      "1 and 2) rank without a Window node") {
+    import org.apache.spark.sql.functions.col
+    import graft.operators.SimilaritySearch
+    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
+    val qs = emb.filter(col("vec_id") < 10)
+    val cents = SimilaritySearch.sampleCentroids(emb, "vec_id",
+      "embedding", 8)
+    val frames = Seq(
+      "ivfTopK" -> SimilaritySearch.ivfTopK(qs, "vec_id", emb,
+        "vec_id", "embedding", cents, k = 4),
+      "assignCells" -> SimilaritySearch.assignCells(emb, "vec_id",
+        "embedding", cents),
+      "ivfKnnLists ca=1" -> SimilaritySearch.ivfKnnLists(qs, "vec_id",
+        emb, "vec_id", "embedding", cents, k = 4),
+      "ivfKnnLists ca=2" -> SimilaritySearch.ivfKnnLists(qs, "vec_id",
+        emb, "vec_id", "embedding", cents, k = 4, corpusAssign = 2))
+    for ((name, df) <- frames) {
+      df.collect() // finalize the adaptive plan
+      val p = df.queryExecution.executedPlan.toString
+      assert(!p.contains("Window"), s"$name plans a window:\n$p")
+    }
+  }
 }

@@ -9,8 +9,8 @@ import graft.functions.VectorFunctions.{dotF64, l2Norm}
 
 /** The r15 per-row top-p cell kernel ([[TopCells]]) must equal the
   * ranked-window formulation it replaced — scores, tie-breaks and the
-  * kept set, bit for bit — on real embeddings, tied fixtures, ±0.0
-  * scores, and p larger than the cell count. */
+  * kept set, bit for bit — on real embeddings, tied fixtures, a real
+  * -0.0 score, and p larger than the cell count. */
 class CellKernelSpec extends SparkTestBase {
 
   /** The pre-r15 attachCells window form, reconstructed as the
@@ -69,14 +69,27 @@ class CellKernelSpec extends SparkTestBase {
     assert(got === Set((1L, 3L), (1L, 5L), (2L, 3L), (2L, 5L)))
   }
 
-  test("±0.0 scores order like Spark's total order (0.0 beats -0.0)") {
+  test("a real -0.0 score ties 0.0 and breaks on cell_id") {
     import spark.implicits._
-    // vec ⟂ c1 with dot = +0.0; vec ⟂ c2 with dot = -0.0
+    // the dot fold starts at +0.0, so a perpendicular centroid scores
+    // +0.0; a tiny negative dot that underflows in the division is a
+    // true -0.0: -MinPositiveValue / (1 · 4)
+    val negZero = Seq(-Double.MinPositiveValue, 4.0)
     val rows = Seq((1L, Seq(1.0, 0.0))).toDF("id", "vec")
-    val cents = Seq((1L, Seq(0.0, 1.0)), (2L, Seq(-0.0, 1.0)))
-      .toDF("cell_id", "centroid")
-    assert(kernelPicks(rows, "id", "vec", cents, 1) ===
-      windowPicks(rows, "id", "vec", cents, 1))
+    val score = rows.select((dotF64(col("vec"), typedLit(negZero)) /
+        (l2Norm(col("vec")) * l2Norm(typedLit(negZero)))))
+      .head().getDouble(0)
+    assert(1.0 / score === Double.NegativeInfinity,
+      s"fixture score $score is not -0.0")
+    // -0.0 on the lower cell_id: a tie keeps it; 0.0-beats-(-0.0)
+    // would pick cell 2
+    for ((neg, pos) <- Seq((1L, 2L), (2L, 1L))) {
+      val cents = Seq((neg, negZero), (pos, Seq(0.0, 1.0)))
+        .toDF("cell_id", "centroid")
+      val got = kernelPicks(rows, "id", "vec", cents, 1)
+      assert(got === windowPicks(rows, "id", "vec", cents, 1))
+      assert(got === Set((1L, 1L)))
+    }
   }
 
   test("p past the cell count keeps every cell, best first") {

@@ -111,4 +111,14 @@ class NnDescentSpec extends SparkTestBase {
       .queryExecution.sparkPlan.toString
     assert(!plan.contains("CartesianProduct"), plan)
   }
+
+  test("a NULL-vector row is filtered out: never a node or a " +
+      "neighbor") {
+    val emb = corpus(40).withColumn("embedding",
+      when(col("vec_id") =!= 7L, col("embedding")))
+    val out = NnDescent.knnGraph(emb, "vec_id", "embedding", k = 4,
+      iters = 1).collect()
+    assert(!out.exists(r => r.getLong(0) == 7L || r.getLong(1) == 7L))
+    assert(out.map(_.getLong(0)).toSet === (0L until 40L).toSet - 7L)
+  }
 }

@@ -539,4 +539,85 @@ class SimilaritySpec extends SparkTestBase {
     // still reads
     assert(out.count() === 2L)
   }
+
+  test("IVF and NN-descent operators validate k, nProbe and " +
+      "corpusAssign at entry, naming the parameter") {
+    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
+    val qs = emb.filter(col("vec_id") < 4)
+    val cents = SimilaritySearch.sampleCentroids(emb, "vec_id",
+      "embedding", 4)
+    def rejects(param: String)(f: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](f)
+      assert(e.getMessage.contains(s"$param must be >= 1"), e.getMessage)
+    }
+    rejects("nProbe")(SimilaritySearch.ivfTopK(qs, "vec_id", emb,
+      "vec_id", "embedding", cents, k = 3, nProbe = 0))
+    rejects("k")(SimilaritySearch.ivfTopK(qs, "vec_id", emb,
+      "vec_id", "embedding", cents, k = 0))
+    rejects("nProbe")(SimilaritySearch.ivfKnnLists(qs, "vec_id", emb,
+      "vec_id", "embedding", cents, k = 3, nProbe = 0))
+    rejects("corpusAssign")(SimilaritySearch.ivfKnnLists(qs, "vec_id",
+      emb, "vec_id", "embedding", cents, k = 3, corpusAssign = 0))
+    rejects("nProbe")(SimilaritySearch.parityMarginCandidates(emb,
+      "vec_id", "embedding", nProbe = 0))
+    rejects("corpusAssign")(SimilaritySearch.parityMarginCandidates(emb,
+      "vec_id", "embedding", corpusAssign = 0))
+    rejects("k")(NnDescent.knnGraph(emb, "vec_id", "embedding", k = 0))
+  }
+
+  test("IVF, cell assignment and NN-descent reject a non-integral " +
+      "id or cell_id column, naming it") {
+    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
+      .withColumn("sid", col("vec_id").cast("string"))
+    val qs = emb.filter(col("vec_id") < 4)
+    val cents = SimilaritySearch.sampleCentroids(emb, "vec_id",
+      "embedding", 4)
+    def rejects(column: String)(f: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](f)
+      assert(e.getMessage.contains(s"'$column'"), e.getMessage)
+    }
+    rejects("sid")(SimilaritySearch.ivfTopK(qs, "sid", emb, "vec_id",
+      "embedding", cents, k = 3))
+    rejects("sid")(SimilaritySearch.ivfKnnLists(qs, "vec_id", emb,
+      "sid", "embedding", cents, k = 3))
+    rejects("sid")(SimilaritySearch.assignCells(emb, "sid",
+      "embedding", cents))
+    rejects("cell_id")(SimilaritySearch.assignCells(emb, "vec_id",
+      "embedding", cents.withColumn("cell_id",
+        col("cell_id").cast("string"))))
+    rejects("sid")(NnDescent.knnGraph(emb, "sid", "embedding"))
+    rejects("sid")(SimilaritySearch.parityMarginCandidates(emb, "sid",
+      "embedding"))
+  }
+
+  test("NULL vectors are filtered out before cell assignment: a " +
+      "NULL-vector corpus row is never a hit, a NULL-vector query " +
+      "returns no rows") {
+    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
+    val cents = SimilaritySearch.sampleCentroids(emb, "vec_id",
+      "embedding", 4)
+    def nullAt(df: org.apache.spark.sql.DataFrame, id: Long) =
+      df.withColumn("embedding", when(col("vec_id") =!= id,
+        col("embedding")))
+    // vec 3 is its own best hit: with its vector NULL it must vanish
+    val corpus = nullAt(emb, 3L)
+    val qs = nullAt(emb.filter(col("vec_id") < 6), 5L)
+    val qIds = qs.select("vec_id").collect().map(_.getLong(0)).toSet
+    assert(qIds.contains(3L) && qIds.contains(5L))
+    for (lists <- Seq(
+        SimilaritySearch.ivfTopK(qs, "vec_id", corpus, "vec_id",
+          "embedding", cents, k = 4, nProbe = 4),
+        SimilaritySearch.ivfKnnLists(qs, "vec_id", corpus, "vec_id",
+          "embedding", cents, k = 4, nProbe = 4, corpusAssign = 2))) {
+      val hits = lists.collect().map(r => (r.getLong(0), r.getLong(1)))
+      assert(!hits.exists(_._2 == 3L), "NULL-vector corpus row hit")
+      assert(!hits.exists(_._1 == 5L), "NULL-vector query answered")
+      // nProbe = 4 of 4 cells: every other query is answered
+      assert(hits.map(_._1).toSet === qIds - 5L)
+    }
+    val assigned = SimilaritySearch.assignCells(corpus, "vec_id",
+      "embedding", cents).select("vec_id").collect().map(_.getLong(0))
+    assert(assigned.length === emb.count() - 1)
+    assert(!assigned.contains(3L))
+  }
 }

@@ -24,7 +24,7 @@ class AggThresholdSpec extends SparkTestBase {
       "stream size (the argument that makes 64Ki in-flight buffers " +
       "safe: <= ~25 MB/task at k=24)") {
     val k = 24
-    val agg = new TopK.TopKDedupAgg(k)
+    val agg = new TopK.TopKAgg(k, dedup = true)
     var buf = agg.zero
     // feed far more candidates than k, with duplicate ids (the
     // NN-descent stream shape) — the buffer must never grow past k
