@@ -66,12 +66,12 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // The k-means seeding window (k rows) and the WoW lag window (one
-    // row per week) are the only no-partition windows in the engine —
-    // both provably bounded-row (see PlanSpec), so WindowExec's
-    // single-partition WARN is noise here; worse, the repeated lines
-    // flood the captured output tail and can push Bench's one JSON
-    // line out of the driver's 2000-byte capture window.
+    // The engine's no-partition windows (the WoW lag window: one row
+    // per week; the PQ label-code rank: one row per label) are
+    // bounded-row, so WindowExec's single-partition WARN is noise
+    // here; worse, the repeated lines flood the captured output tail
+    // and can push Bench's one JSON line out of the driver's
+    // 2000-byte capture window.
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.sql.execution.window.WindowExec",
       org.apache.logging.log4j.Level.ERROR)

@@ -36,31 +36,23 @@ import graft.functions.VectorFunctions._
 object ProductQuantization {
 
   /** Per-(sub, code, cw) codebooks: codeword `code` of subspace `sub`
-    * is the exact decimal-sum mean of that label's subvectors. `code`
-    * is the 0-based rank of the label (deterministic).
+    * is the [[ExactMean]] of that label's subvectors. `code` is the
+    * 0-based rank of the label (deterministic).
     *
     * Scale note: the mean is `sum(cast(x as DECIMAL(18,9)))/count` —
     * exact, order-independent, and partial-aggregating (map-side
-    * combine; per-group state is one decimal + one long, NOT the
-    * group's membership), so a cell with 10⁹ members costs the same
-    * buffer as one with 10. The per-(label,sub) cw assembly below
-    * collects only `dsub` mean values (bounded by dimension, not
-    * corpus). Training may also sample: PQ codebooks converge on a
-    * small fraction of the corpus. */
+    * combine; per-group state is one long sum and count per
+    * position, NOT the group's membership), so a cell with 10⁹
+    * members costs the same buffer as one with 10. Training may also
+    * sample: PQ codebooks converge on a small fraction of the
+    * corpus. */
   def codebooks(df: DataFrame, labelCol: String, vecCol: String,
       m: Int): DataFrame = {
     val sv = subvectors(df.select(col(labelCol).as("label"),
-      col("vec_id"), col(vecCol).cast("array<double>").as("v")), "v", m)
-    val means = sv
-      .select(col("label"), col("vec_id"), col("sub"),
-        posexplode(col("sv")))
-      .groupBy(col("label"), col("sub"), col("pos"))
-      .agg((sum(col("col").cast(
-          org.apache.spark.sql.types.DecimalType(18, 9)))
-        .cast("double") / count(lit(1))).as("mval"))
+      col(vecCol).cast("array<double>").as("v")), "v", m)
+    val means = sv.filter(size(col("sv")) > 0)
       .groupBy(col("label"), col("sub"))
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("mval")))),
-        x => x.getField("mval")).as("cw"))
+      .agg(ExactMean.of(col("sv")).as("cw"))
     val codes = df.select(col(labelCol).as("label")).distinct()
       .withColumn("code",
         (row_number().over(org.apache.spark.sql.expressions.Window

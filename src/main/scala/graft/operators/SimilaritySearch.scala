@@ -1,8 +1,17 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType,
+  StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 import graft.functions.VectorFunctions._
 
 /** Similarity search over embedding columns (SURVEY §2.11 V3/T1 — the
@@ -675,16 +684,6 @@ object SimilaritySearch {
       centroids, k, nProbe, broadcastQueries = false,
       corpusAssign = corpusAssign)
 
-  /** Lloyd's k-means coarse quantizer for IVF over corpora WITHOUT
-    * labels (the label-centroid shortcut only works on labeled
-    * testdata). Deterministic: initial centroids are the k vectors
-    * with the smallest ids, assignment breaks ties on cell id, and
-    * the update step is the exact decimal-sum mean (order-independent
-    * and partial-aggregating — bounded per-group state even for a
-    * cell holding most of the corpus); empty cells keep
-    * their previous centroid. Each iteration is one broadcast join +
-    * one keyed aggregation — no driver-side data movement beyond the
-    * k centroid rows. Returns (cell_id, centroid ARRAY<DOUBLE>). */
   /** Coarse-quantizer sizing: #cells ≈ √n (the IVF practice from
     * Jégou et al., "Product Quantization for Nearest Neighbor
     * Search" §V — balances per-cell scan length against probe-side
@@ -766,80 +765,117 @@ object SimilaritySearch {
         maxTrain.toDouble / n * Split.Buckets).toLong))
   }
 
+  /** Lloyd's k-means coarse quantizer for IVF over corpora WITHOUT
+    * labels (the label-centroid shortcut only works on labeled
+    * testdata). Returns (cell_id INT, centroid ARRAY<DOUBLE>), a local
+    * frame built from the driver's centroid table.
+    *
+    * Deterministic: the seeds are the k vectors with the smallest ids
+    * (cell_id 0..k-1 in id order), assignment ranks cells with the
+    * [[graft.functions.TopCells]] kernel ((score desc, cell_id asc),
+    * the ranked-window order), and the update is the [[ExactMean]]:
+    * per position `CAST(SUM(CAST(x AS DECIMAL(18,9))) AS DOUBLE) /
+    * COUNT(*)` over the cell's members, exact in any merge order. A
+    * cell that gains no member keeps its previous centroid. Rows with
+    * a NULL vector are dropped first: never a seed, never a member.
+    *
+    * Round shape: the training vectors are persisted once, and each
+    * round is ONE fold over them, one Spark job. The driver holds the
+    * k × dim centroid table and ships it as one broadcast, destroyed
+    * when the round ends; each task assigns its rows and sums them
+    * into per-cell exact means, and the driver merges the k-sized
+    * partials. No per-round shuffle and no checkpoint; the persisted
+    * vectors are freed before the call returns. */
   def kmeansCentroids(df: DataFrame, idCol: String, vecCol: String,
       k: Int, maxIter: Int = 10, maxTrain: Int = 0): DataFrame = {
     val train = if (maxTrain > 0) trainingSample(df, idCol, maxTrain)
       else df
-    // row norms once per vector for the per-iteration assignment
-    // (cosine() would pay 3 dots per row×centroid pair, per iter);
-    // fan the narrow training scan out so the assignment runs wide
-    val v = graft.GraftSession.fanOutForCompute(
-      train.select(col(idCol).as("_id"),
-        col(vecCol).cast("array<double>").as("v")))
-      .withColumn("_vn", l2Norm(col("v")))
-      .persist()
-    val idW = Window.orderBy(col("_id"))
-    var cents = v.orderBy(col("_id")).limit(k)
-      .withColumn("cell_id", row_number().over(idW) - 1)
-      .select(col("cell_id"), col("v").as("centroid"))
-    var iter = 0
-    while (iter < maxIter) {
-      // per-row argmax via the [[graft.functions.TopCells]] kernel
-      // over the packed broadcast centroid table (the attachCells r15
-      // device): no ranking window, no exchange, no re-attach join —
-      // the assignment is a map-only pass per iteration. Scores and
-      // the (score desc, cell_id asc) tie-break are bit-identical to
-      // the window form (CellKernelSpec).
-      val assigned = v.crossJoin(broadcast(packCells(cents)))
-        .withColumn("cell_id", element_at(graft.functions.TopCells.of(
-          col("v"), col("_cells"), 1), 1)
-          .cast(cents.schema("cell_id").dataType))
-        .select(col("cell_id"), col("_id"), col("v"))
-      val updated = assigned
-        .select(col("cell_id"), col("_id"), posexplode(col("v")))
-        .groupBy(col("cell_id"), col("pos"))
-        .agg((sum(col("col").cast(
-            org.apache.spark.sql.types.DecimalType(18, 9)))
-          .cast("double") / count(lit(1))).as("m"))
-        .groupBy(col("cell_id"))
-        .agg(array_sort(collect_list(struct(col("pos"), col("m"))))
-          .as("pm"))
-        .withColumn("centroid", transform(col("pm"), x => x.getField("m")))
-        .select(col("cell_id"), col("centroid"))
-      // empty cells keep their previous centroid
-      val kept = cents.join(updated.select(col("cell_id")),
-        Seq("cell_id"), "left_anti")
-      cents = updated.unionByName(kept).localCheckpoint()
-      iter += 1
-    }
-    v.unpersist()
-    cents
+    val vecs = train.filter(col(vecCol).isNotNull).select(
+      col(idCol).as("_id"), col(vecCol).cast("array<double>").as("v"))
+    var cents = vecs.orderBy(col("_id")).limit(k).collect()
+      .map(_.getSeq[java.lang.Double](1).toArray)
+    // fan the narrow training scan out so each round's fold runs wide;
+    // the vectors persist as serialized RDD blocks (the first fold
+    // fills them; ~5% smaller than the object form, no slower)
+    val v = graft.GraftSession.fanOutForCompute(vecs.select(col("v")))
+      .queryExecution.toRdd.map(_.getArray(0).copy())
+      .persist(StorageLevel.MEMORY_AND_DISK_SER)
+    try {
+      val ansi = SQLConf.get.ansiEnabled
+      var iter = 0
+      while (iter < maxIter && cents.nonEmpty) {
+        val table = df.sparkSession.sparkContext.broadcast(packTable(cents))
+        try {
+          val cells = lloydFold(v, table, cents.length, ansi)
+          cents = cents.indices.map { c =>
+            if (cells(c) == null || cells(c).dim == 0) cents(c)
+            else cells(c).mean
+          }.toArray
+        } finally table.destroy()
+        iter += 1
+      }
+      df.sparkSession.createDataFrame(
+        java.util.Arrays.asList(cents.indices.map(c =>
+          Row(c, cents(c).toSeq)): _*),
+        StructType(Seq(StructField("cell_id", IntegerType, false),
+          StructField("centroid", ArrayType(DoubleType, true)))))
+    } finally v.unpersist(blocking = false)
   }
 
-  /** K-means-free coarse centroids: mean vector per existing label
-    * column via the exact decimal-sum mean (per-element cast to
-    * DECIMAL(18,9), exact sum, cast back to double) — deterministic
-    * under ANY aggregation order, so it partial-aggregates map-side:
-    * per-(cell,pos) state is one decimal + one long, NOT the cell's
-    * membership list. Bit-reproducible by a SQL oracle's
-    * `CAST(SUM(CAST(e AS DECIMAL(18,9))) AS DOUBLE)/COUNT(*)`, which
-    * is what lets the IVF query (q43) be value-checked instead of
-    * rows-only. The per-cell array assembly below collects only one
-    * mean per dimension (bounded by dim, not corpus). Returns
-    * (cell_id, centroid ARRAY<DOUBLE>). */
+  /** The driver's centroid table as [[graft.functions.TopCells]] reads
+    * it, the same (cell_id, centroid, cnorm) structs [[packCells]]
+    * builds from a frame: cell_id order, cnorm the sequential-fold
+    * norm, and a NULL element read as 0.0 as the kernel reads it. */
+  private def packTable(cents: Array[Array[java.lang.Double]]): ArrayData =
+    new GenericArrayData(cents.indices.map { c =>
+      val x = cents(c).map(e => if (e == null) 0.0 else e.doubleValue)
+      var self = 0.0
+      x.foreach(e => self += e * e)
+      InternalRow(c.toLong, UnsafeArrayData.fromPrimitiveArray(x),
+        math.sqrt(self))
+    })
+
+  /** One Lloyd round: each task assigns its rows to their best cell of
+    * the broadcast table and sums them into per-cell exact means; the
+    * driver merges the partials. Entry c is cell c's members' mean, or
+    * null when no row picked cell c. */
+  private def lloydFold(vecs: RDD[ArrayData],
+      table: Broadcast[ArrayData], k: Int,
+      ansi: Boolean): Array[ExactMean] =
+    vecs.mapPartitions { it =>
+      val cells = table.value
+      val acc = new Array[ExactMean](k)
+      it.foreach { vec =>
+        val c = graft.functions.TopCells.topCells(vec, cells, 1,
+          vecIsFloat = false).getLong(0).toInt
+        if (acc(c) == null) acc(c) = new ExactMean(ansi)
+        acc(c).add(vec)
+      }
+      Iterator.single(acc)
+    }.reduce { (a, b) =>
+      var c = 0
+      while (c < k) {
+        if (a(c) == null) a(c) = b(c)
+        else if (b(c) != null) a(c).merge(b(c))
+        c += 1
+      }
+      a
+    }
+
+  /** K-means-free coarse centroids: the [[ExactMean]] of each label's
+    * vectors (per position `CAST(SUM(CAST(x AS DECIMAL(18,9))) AS
+    * DOUBLE) / COUNT(*)`) — deterministic under ANY aggregation order,
+    * so it partial-aggregates map-side with per-group state bounded by
+    * the dimension, not the group's membership. Bit-reproducible by a
+    * SQL oracle, which is what lets the IVF query (q43) be value-checked
+    * instead of rows-only. NULL and empty vectors add nothing, so a
+    * label with only those has no centroid. Returns (cell_id,
+    * centroid ARRAY<DOUBLE>). */
   def labelCentroids(df: DataFrame, labelCol: String,
-      vecCol: String, orderCol: String = "vec_id"): DataFrame =
-    df.select(col(labelCol).as("cell_id"), col(orderCol).as("_ord"),
-        posexplode(col(vecCol).cast("array<double>")))
-      .groupBy(col("cell_id"), col("pos"))
-      .agg((sum(col("col").cast(
-          org.apache.spark.sql.types.DecimalType(18, 9)))
-        .cast("double") / count(lit(1))).as("m"))
-      .groupBy(col("cell_id"))
-      .agg(array_sort(collect_list(struct(col("pos"), col("m"))))
-        .as("pm"))
-      .withColumn("centroid", transform(col("pm"), x => x.getField("m")))
-      .select(col("cell_id"), col("centroid"))
+      vecCol: String): DataFrame =
+    df.filter(size(col(vecCol)) > 0)
+      .groupBy(col(labelCol).as("cell_id"))
+      .agg(ExactMean.of(col(vecCol)).as("centroid"))
 
   /** SEMANTIC decontamination: nearest eval-set embedding per corpus
     * embedding, with a contamination flag at `threshold` — the

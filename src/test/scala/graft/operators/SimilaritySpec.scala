@@ -1,8 +1,11 @@
 package graft.operators
 
 import graft.SparkTestBase
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.functions.VectorFunctions
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.DecimalType
+import graft.functions.{TopCells, VectorFunctions}
 
 /** Retrieval-rank invariants (SURVEY §5: "top-k ordering (T1)") +
   * IVF recall against the brute-force oracle. */
@@ -619,5 +622,199 @@ class SimilaritySpec extends SparkTestBase {
       "embedding", cents).select("vec_id").collect().map(_.getLong(0))
     assert(assigned.length === emb.count() - 1)
     assert(!assigned.contains(3L))
+  }
+
+  /** The previous k-means body, kept as the bitwise reference for
+    * [[SimilaritySearch.kmeansCentroids]]: window seeding, the
+    * TopCells assignment against the packed broadcast row, then
+    * posexplode → per-(cell, pos) DECIMAL(18,9) sum / count →
+    * collect_list reassembly, and a left_anti keep for empty cells. */
+  private def referenceKmeans(df: DataFrame, idCol: String,
+      vecCol: String, k: Int, maxIter: Int): DataFrame = {
+    val v = df.select(col(idCol).as("_id"),
+      col(vecCol).cast("array<double>").as("v"))
+    var cents = v.orderBy(col("_id")).limit(k)
+      .withColumn("cell_id",
+        row_number().over(Window.orderBy(col("_id"))) - 1)
+      .select(col("cell_id"), col("v").as("centroid"))
+    for (_ <- 0 until maxIter) {
+      val packed = cents.agg(array_sort(collect_list(struct(
+        col("cell_id").cast("long").as("cell_id"),
+        col("centroid").cast("array<double>").as("centroid"),
+        VectorFunctions.l2Norm(col("centroid")).as("cnorm")))).as("_cells"))
+      val updated = v.crossJoin(broadcast(packed))
+        .withColumn("cell_id", element_at(
+          TopCells.of(col("v"), col("_cells"), 1), 1).cast("int"))
+        .select(col("cell_id"), posexplode(col("v")))
+        .groupBy(col("cell_id"), col("pos"))
+        .agg((sum(col("col").cast(DecimalType(18, 9))).cast("double") /
+          count(lit(1))).as("m"))
+        .groupBy(col("cell_id"))
+        .agg(array_sort(collect_list(struct(col("pos"), col("m"))))
+          .as("pm"))
+        .select(col("cell_id"),
+          transform(col("pm"), x => x.getField("m")).as("centroid"))
+      val kept = cents.join(updated.select(col("cell_id")),
+        Seq("cell_id"), "left_anti")
+      cents = updated.unionByName(kept).localCheckpoint()
+    }
+    cents
+  }
+
+  /** cell_id → the centroid's raw IEEE bits (None for a NULL element). */
+  private def centroidBits(df: DataFrame): Map[Int, Seq[Option[Long]]] =
+    df.collect().map(r => r.getInt(0) ->
+      r.getSeq[java.lang.Double](1).map(d => Option(d).map(x =>
+        java.lang.Double.doubleToRawLongBits(x)))).toMap
+
+  private def assertKmeansMatchesReference(df: DataFrame, k: Int,
+      maxIter: Int, vecCol: String = "embedding"): Unit = {
+    val got = centroidBits(SimilaritySearch.kmeansCentroids(df, "vec_id",
+      vecCol, k, maxIter))
+    val want = centroidBits(referenceKmeans(df, "vec_id", vecCol, k,
+      maxIter))
+    assert(got.keySet === want.keySet)
+    want.foreach { case (c, bits) =>
+      assert(got(c) === bits, s"cell $c differs from the reference")
+    }
+  }
+
+  private def vecFrame(rows: Seq[(Long, Array[Double])]): DataFrame = {
+    import spark.implicits._
+    rows.toDF("vec_id", "embedding")
+  }
+
+  test("kmeansCentroids is bitwise the DataFrame round on the testdata " +
+      "embeddings, as FLOAT and as DOUBLE input, and at maxIter = 0") {
+    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
+    assertKmeansMatchesReference(emb, k = 8, maxIter = 5)
+    assertKmeansMatchesReference(emb.withColumn("embedding",
+      col("embedding").cast("array<double>")), k = 8, maxIter = 5)
+    assertKmeansMatchesReference(emb, k = 8, maxIter = 0)
+  }
+
+  test("kmeansCentroids is bitwise the DataFrame round on wide-" +
+      "magnitude mixed-sign vectors and HALF_UP ties") {
+    val r = new scala.util.Random(17)
+    val ties = Array(5e-10, -5e-10, 2.5e-9, 1.0000000015, -0.1234567895,
+      123456.1234567895, 99999999.99999999)
+    val rows = (0L until 300L).map { i =>
+      (i, Array.tabulate(12) { j =>
+        if (i % 7 == 0 && j < ties.length) ties(j)
+        else (if (r.nextBoolean()) 1.0 else -1.0) *
+          math.pow(10, -4 + 12.5 * r.nextDouble())
+      })
+    }
+    assertKmeansMatchesReference(vecFrame(rows), k = 10, maxIter = 4)
+  }
+
+  test("kmeansCentroids keeps an empty cell's centroid exactly as the " +
+      "DataFrame round does (duplicate seeds)") {
+    val r = new scala.util.Random(23)
+    // ids 0 and 1 are the same vector: cell 1 ties cell 0 for every
+    // row and loses on cell_id, so it never gains a member
+    val seed = Array(1.0, 0.5, -0.25)
+    val rows = Seq((0L, seed), (1L, seed.clone())) ++
+      (2L until 120L).map(i => (i, Array.fill(3)(r.nextGaussian())))
+    val df = vecFrame(rows)
+    assertKmeansMatchesReference(df, k = 4, maxIter = 1)
+    assertKmeansMatchesReference(df, k = 4, maxIter = 3)
+    val c1 = SimilaritySearch.kmeansCentroids(df, "vec_id", "embedding",
+      k = 4, maxIter = 1).filter(col("cell_id") === 1).head()
+    assert(c1.getSeq[Double](1) === Seq(1.0, 0.5, -0.25))
+  }
+
+  test("kmeansCentroids edge elements behave as the DataFrame round: " +
+      "a NaN element counts but adds nothing, 1e9 fails the cast") {
+    val r = new scala.util.Random(29)
+    def base = (0L until 60L).map(i => (i, Array.fill(4)(r.nextGaussian())))
+    val withNaN = base.map { case (i, v) =>
+      if (i == 5L) (i, v.updated(2, Double.NaN)) else (i, v) }
+    assertKmeansMatchesReference(vecFrame(withNaN), k = 3, maxIter = 3)
+    val withHuge = base.map { case (i, v) =>
+      if (i == 9L) (i, v.updated(1, 1e9)) else (i, v) }
+    def failure(f: => Any): String = {
+      val e = intercept[Exception](f)
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).mkString(" | ")
+    }
+    val df = vecFrame(withHuge)
+    for (msg <- Seq(
+        failure(SimilaritySearch.kmeansCentroids(df, "vec_id",
+          "embedding", k = 3, maxIter = 1)),
+        failure(referenceKmeans(df, "vec_id", "embedding", k = 3,
+          maxIter = 1).collect())))
+      assert(msg.contains("NUMERIC_VALUE_OUT_OF_RANGE"), msg)
+    // no round, no cast: both return the seeds
+    assertKmeansMatchesReference(df, k = 3, maxIter = 0)
+  }
+
+  test("kmeansCentroids drops NULL-vector rows: never a seed, never a " +
+      "member") {
+    import spark.implicits._
+    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
+    // id -1 sorts first, so a kept NULL row would be cell 0's seed
+    val withNull = emb.unionByName(
+      Seq((-1L, 0)).toDF("vec_id", "label")
+        .withColumn("embedding", lit(null).cast("array<float>")))
+    val want = centroidBits(SimilaritySearch.kmeansCentroids(emb,
+      "vec_id", "embedding", k = 8, maxIter = 3))
+    val got = centroidBits(SimilaritySearch.kmeansCentroids(withNull,
+      "vec_id", "embedding", k = 8, maxIter = 3))
+    assert(got === want)
+  }
+
+  test("kmeansCentroids runs at most maxIter + 2 jobs and leaves no " +
+      "persisted RDD or live centroid broadcast behind") {
+    import org.apache.spark.graftprobe.DriverProbe
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    val sc = spark.sparkContext
+    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
+    val group = "kmeans-job-count"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(
+            _.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    val before = sc.getPersistentRDDs.keySet
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "kmeans")
+    val cents = try SimilaritySearch.kmeansCentroids(emb, "vec_id",
+        "embedding", k = 8, maxIter = 5)
+      finally sc.clearJobGroup()
+    DriverProbe.drainListeners(sc)
+    sc.removeSparkListener(listener)
+    // one fold per round, the seeding take, and the fan-out's
+    // shuffle when the round-1 fold first fills the persisted vectors
+    assert(jobs.get >= 5 && jobs.get <= 7, s"${jobs.get} jobs")
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
+    eventually(timeout(10.seconds), interval(100.millis)) {
+      assert(!DriverProbe.liveBroadcastValues(sc)
+        .exists(_.isInstanceOf[ArrayData]), "a centroid table is live")
+    }
+    assert(cents.count() === 8L)
+  }
+
+  test("labelCentroids is bitwise the posexplode/DECIMAL(18,9) sum " +
+      "formulation it replaced") {
+    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
+    val want = centroidBits(emb
+      .select(col("label").as("cell_id"), posexplode(col("embedding")
+        .cast("array<double>")))
+      .groupBy(col("cell_id"), col("pos"))
+      .agg((sum(col("col").cast(DecimalType(18, 9))).cast("double") /
+        count(lit(1))).as("m"))
+      .groupBy(col("cell_id"))
+      .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
+      .select(col("cell_id"),
+        transform(col("pm"), x => x.getField("m")).as("centroid")))
+    val got = centroidBits(SimilaritySearch.labelCentroids(emb, "label",
+      "embedding"))
+    assert(got === want)
   }
 }

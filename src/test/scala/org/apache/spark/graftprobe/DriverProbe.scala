@@ -1,0 +1,21 @@
+package org.apache.spark.graftprobe
+
+import org.apache.spark.SparkContext
+import org.apache.spark.storage.BroadcastBlockId
+
+/** Test-side view of driver state Spark keeps `private[spark]`. */
+object DriverProbe {
+  /** Block until the listener bus has delivered every posted event. */
+  def drainListeners(sc: SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+
+  /** The values of the broadcast variables whose blocks the driver
+    * still holds (destroyed ones are gone once their removal lands). */
+  def liveBroadcastValues(sc: SparkContext): Seq[Any] = {
+    val bm = sc.env.blockManager
+    bm.getMatchingBlockIds {
+      case b: BroadcastBlockId => b.field.isEmpty
+      case _ => false
+    }.flatMap(id => bm.getLocalValues(id).toSeq.flatMap(_.data.toList))
+  }
+}
