@@ -21,14 +21,7 @@ object Bench {
       // misreading steady-state throughput by 3-6x on a 5-row result.
       SparkEntry.entry(spark).count()
     } catch { case _: Throwable => () }
-    // Optional comma-separated query filter for focused profiling
-    // (e.g. SPARK_GRAFT_ONLY=q58_embedding_neardups); unset = all.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter(kv => names(kv._1))
-      case None => SparkEntry.queries
-    }
+    val selected = SparkEntry.selected(sys.env.get("SPARK_GRAFT_ONLY"))
     // The indexed-serve queries (q115/q122) build their persisted
     // index ON FIRST USE per corpus (content-fingerprint guard): in a
     // fresh bench JVM that one-time build otherwise lands inside the
@@ -124,12 +117,8 @@ object Bench {
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
         : Seq[Double] = {
       val times = (1 to passes).map { _ =>
-        GraftSession.clearPool(spark)
-        val t0 = System.nanoTime()
-        try {
-          Force.fullEval(fn(spark, sfDir))
-          (System.nanoTime() - t0) / 1e9
-        } catch { case e: Throwable =>
+        try Force.timedPass(spark)(fn(spark, sfDir))
+        catch { case e: Throwable =>
           System.err.println(s"[bench] $name failed: $e")
           -1.0
         }

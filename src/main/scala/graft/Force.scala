@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -49,5 +49,15 @@ object Force {
     renamed.select(xxhash64(cols.toSeq: _*).as("_h"))
       .agg(sum(pmod(col("_h"), lit(1000000007L))), count(lit(1)))
       .head.getLong(1)
+  }
+
+  /** One timed pass of Bench and Profile, in seconds: clear the
+    * storage pool, then build the frame (operators checkpoint while
+    * building) and evaluate it in full. A failure propagates. */
+  def timedPass(spark: SparkSession)(build: => DataFrame): Double = {
+    GraftSession.clearPool(spark)
+    val t0 = System.nanoTime()
+    fullEval(build)
+    (System.nanoTime() - t0) / 1e9
   }
 }

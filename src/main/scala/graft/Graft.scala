@@ -356,7 +356,7 @@ object Graft {
     * distinct counts ([[operators.Profile.profileSketched]]) — the
     * form that scales to arbitrary corpora. */
   def profileColumns(df: DataFrame, cols: Seq[String]): DataFrame =
-    Profile.profileSketched(df, cols)
+    operators.Profile.profileSketched(df, cols)
 
   /** BFS hop distance from a seed set over an edge list
     * ([[operators.Graph.hopDistance]]) — the distance-from-trusted-

@@ -42,6 +42,15 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     suites.map(_._1).reduce(_ ++ _)
 
+  /** The queries named in `only`, a comma-separated list (Bench's
+    * and Verify's `SPARK_GRAFT_ONLY`); all of them when unset. */
+  def selected(only: Option[String])
+      : Map[String, (SparkSession, String) => DataFrame] =
+    only.map(_.split(",").toSet) match {
+      case Some(names) => queries.filter(kv => names(kv._1))
+      case None => queries
+    }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

@@ -9,13 +9,7 @@ object Verify {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = GraftSession.build(s"local[$cpus]", cpus.toInt)
     new java.io.File(outDir).mkdirs()
-    // Optional comma-separated filter for focused local iteration
-    // (same contract as Bench); unset = all queries (the driver path).
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter(kv => names(kv._1))
-      case None => SparkEntry.queries
-    }
+    val selected = SparkEntry.selected(sys.env.get("SPARK_GRAFT_ONLY"))
     selected.foreach { case (name, fn) =>
       // clean storage pool per query (shared Bench discipline)
       GraftSession.clearPool(spark)

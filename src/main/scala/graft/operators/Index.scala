@@ -16,13 +16,13 @@ import graft.functions.Hashing
   */
 object Index {
 
-  /** Build index rows from enriched+embedded chunks: UUIDv5 point id,
-    * embedding, and the 7-field payload projection (F13). */
+  /** Build index rows from enriched+embedded chunks: the 7-field
+    * payload projection (F13), UUIDv5 point id, chunk and embedding —
+    * one point per chunk row; a row without a chunk id has none. */
   def buildPoints(chunks: DataFrame): DataFrame =
-    Ingest.vectorPayload(chunks)
-      .withColumn("point_id", Hashing.uuid5(col("id")))
-      .join(chunks.select(col("chunk_id").as("id"), col("chunk"),
-        col("embedding")), Seq("id"))
+    Ingest.vectorPayload(chunks.filter(col("chunk_id").isNotNull),
+      Hashing.uuid5(col("chunk_id")).as("point_id"), col("chunk"),
+      col("embedding"))
 
   /** S7: write the index bucketed by point-id hash — even file sizes,
     * parallel rebuild, prunable deletes. */

@@ -113,13 +113,13 @@ object Ingest {
   }
 
   /** F13: the 7-field vector payload projection with page coerced
-    * int-or−1 (`consumer_utils.py:55-66`). */
-  def vectorPayload(df: DataFrame): DataFrame =
-    df.select(
+    * int-or−1 (`consumer_utils.py:55-66`), then `extra` columns. */
+  def vectorPayload(df: DataFrame, extra: Column*): DataFrame =
+    df.select(Seq(col("chunk_id").as("id"),
       col("source_file"), col("type"), col("engine"), col("hash"),
-      col("chunk_index"), col("chunk_id").as("id"),
+      col("chunk_index"),
       when(col("page").cast("string").rlike("^\\d+$"),
-        col("page").cast("int")).otherwise(-1).as("page"))
+        col("page").cast("int")).otherwise(-1).as("page")) ++ extra: _*)
 
   /** S4 charset sniffing (`processors/document_processor.py:21-37` —
     * the reference charset-detects with charset_normalizer BEFORE any

@@ -133,15 +133,6 @@ object Rag {
     assembleContext(dedupHits(joined))
   }
 
-  /** [[retrieve]] over a COMPRESSED index scan: the int8-quantized
-    * kernel ([[SimilaritySearch.quantizedTopK]], recall ≈ 0.99 on
-    * the testdata embeddings — RecallBench) shortlists `rerank·k`
-    * chunks reading a quarter of the bytes, then only the shortlist
-    * re-joins float vectors for the exact cosine re-rank — so the
-    * context assembly downstream is bit-identical to [[retrieve]]
-    * whenever the true top-k survives the shortlist (RagSpec pins
-    * equality on the testdata corpus). At 100 TB this quarters the
-    * scan bandwidth of every retrieval. */
   /** Retrieve → RERANK → assemble: the production two-stage serving
     * cascade — a wide dense recall stage (`kCandidates` per query)
     * feeding the cross-encoder precision stage
@@ -166,6 +157,15 @@ object Rag {
     assembleContext(dedupHits(reranked))
   }
 
+  /** [[retrieve]] over a COMPRESSED index scan: the int8-quantized
+    * kernel ([[SimilaritySearch.quantizedTopK]], recall ≈ 0.99 on
+    * the testdata embeddings — RecallBench) shortlists `rerank·k`
+    * chunks reading a quarter of the bytes, then only the shortlist
+    * re-joins float vectors for the exact cosine re-rank — so the
+    * context assembly downstream is bit-identical to [[retrieve]]
+    * whenever the true top-k survives the shortlist (RagSpec pins
+    * equality on the testdata corpus). At 100 TB this quarters the
+    * scan bandwidth of every retrieval. */
   def retrieveCompressed(index: DataFrame, queries: DataFrame, k: Int,
       rerank: Int = 10): DataFrame = {
     val shortlist = SimilaritySearch.quantizedTopK(

@@ -33,6 +33,30 @@ class IndexSpec extends SparkTestBase {
       === pts.select("point_id").collect().toSet)
   }
 
+  test("buildPoints: one point per chunk row — a chunk id two files " +
+      "share gives two points, a NULL chunk id none") {
+    import spark.implicits._
+    val shared = Seq(
+      (Some("DOC_S_44444444"), "f1.md", "a", Array(1.0f, 0.0f)),
+      (Some("DOC_S_44444444"), "f2.md", "b", Array(0.0f, 1.0f)),
+      (None, "f3.md", "c", Array(1.0f, 1.0f)))
+      .toDF("chunk_id", "source_file", "chunk", "embedding")
+      .select(col("chunk_id"), col("source_file"),
+        lit("markdown").as("type"), lit("graft").as("engine"),
+        lit("h").as("hash"), lit(0).as("chunk_index"),
+        lit("1").as("page"), col("chunk"), col("embedding"))
+    val pts = Index.buildPoints(shared)
+    assert(pts.columns.toSeq === Seq("id", "source_file", "type",
+      "engine", "hash", "chunk_index", "page", "point_id", "chunk",
+      "embedding"))
+    val rows = pts.orderBy("source_file").collect()
+    assert(rows.map(r => (r.getAs[String]("source_file"),
+        r.getAs[String]("chunk"))).toSeq ===
+      Seq(("f1.md", "a"), ("f2.md", "b")))
+    assert(rows.map(_.getAs[String]("point_id")).toSet ===
+      Set(graft.functions.Hashing.uuid5Jvm("DOC_S_44444444")))
+  }
+
   test("write + count round-trip through bucketed parquet (S7/V8)") {
     val dir = java.nio.file.Files.createTempDirectory("idx").toString
     Index.write(Index.buildPoints(chunks), dir, buckets = 4)

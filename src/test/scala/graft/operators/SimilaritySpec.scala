@@ -787,7 +787,7 @@ class SimilaritySpec extends SparkTestBase {
     val cents = try SimilaritySearch.kmeansCentroids(emb, "vec_id",
         "embedding", k = 8, maxIter = 5)
       finally sc.clearJobGroup()
-    DriverProbe.drainListeners(sc)
+    org.apache.spark.sql.graftbridge.ListenerBridge.drainListeners(sc)
     sc.removeSparkListener(listener)
     // one fold per round, the seeding take, and the fan-out's
     // shuffle when the round-1 fold first fills the persisted vectors

@@ -5,10 +5,6 @@ import org.apache.spark.storage.BroadcastBlockId
 
 /** Test-side view of driver state Spark keeps `private[spark]`. */
 object DriverProbe {
-  /** Block until the listener bus has delivered every posted event. */
-  def drainListeners(sc: SparkContext): Unit =
-    sc.listenerBus.waitUntilEmpty()
-
   /** The values of the broadcast variables whose blocks the driver
     * still holds (destroyed ones are gone once their removal lands). */
   def liveBroadcastValues(sc: SparkContext): Seq[Any] = {
