@@ -64,6 +64,10 @@ object GraftSession {
       .config("spark.sql.warehouse.dir",
         s"${sys.props("java.io.tmpdir")}/graft-warehouse")
       .config("spark.ui.enabled", "false")
+      // local writes set file and directory modes in-process instead
+      // of forking `chmod` for each (graft.io.PosixLocalFileSystem)
+      .config("spark.hadoop.fs.file.impl",
+        classOf[graft.io.PosixLocalFileSystem].getName)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // The engine's no-partition windows (the WoW lag window: one row

@@ -208,18 +208,6 @@ object Chunker {
       .select(df.columns.filterNot(_ == mdCol).map(col).toSeq
         :+ col("_piece.*"): _*)
 
-  private val slidingUdf = udf { (text: String, size: Int, overlap: Int) =>
-    if (text == null) Array.empty[String]
-    else slidingWindowChars(text, size, overlap).toArray
-  }
-
-  /** C3 as a DataFrame op: explode char windows with their index. */
-  def slidingWindows(df: DataFrame, textCol: String, size: Int = 6000,
-      overlap: Int = 600): DataFrame =
-    df.select(col("*"),
-      posexplode(slidingUdf(col(textCol), lit(size), lit(overlap)))
-        .as(Seq("window_index", "window")))
-
   /** C8: passage-prefix enrichment + deterministic ids
     * (`producer_graph.py:92-113`): prepend "passage: [DOC_xxxx] ",
     * add md5 entry hash and chunk_id. */

@@ -25,11 +25,22 @@ object Index {
       col("embedding"))
 
   /** S7: write the index bucketed by point-id hash — even file sizes,
-    * parallel rebuild, prunable deletes. */
+    * parallel rebuild, prunable deletes. Each `bucket=N/` directory
+    * holds ONE part file: the rows are shuffled on the bucket first
+    * and AQE sizes the write tasks, so a write pays per byte, not
+    * per (task × bucket) file. Through the session's local
+    * filesystem ([[graft.io.PosixLocalFileSystem]]) no file or
+    * directory forks a process. The vector column skips parquet's
+    * dictionary: random doubles never compress by it, and building
+    * one before falling back to PLAIN cost about a third of the
+    * write. */
   def write(points: DataFrame, dir: String, buckets: Int = 64): Unit =
     points
       .withColumn("bucket", pmod(xxhash64(col("point_id")), lit(buckets)))
-      .write.mode("overwrite").partitionBy("bucket").parquet(dir)
+      .repartition(col("bucket"))
+      .write.mode("overwrite")
+      .option("parquet.enable.dictionary#embedding.list.element", "false")
+      .partitionBy("bucket").parquet(dir)
 
   /** S7 at the 100 TB posture: Spark-native BUCKETED table write
     * (`bucketBy` + sortBy on the join key) — joins and aggregations

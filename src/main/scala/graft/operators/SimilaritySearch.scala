@@ -413,13 +413,6 @@ object SimilaritySearch {
       }
     }
 
-  /** Column of `bands` packed band values for `vec` (see
-    * [[bandValuesUdf]]); `offsets` must have length bands·bandBits. */
-  def bandValues(vec: Column, bands: Int, bandBits: Int,
-      offsets: Seq[Double]): Column =
-    bandValuesUdf(vec.cast("array<double>"), lit(bands), lit(bandBits),
-      typedLit(offsets))
-
   /** Per-bit offsets that recenter the hyperplanes on the corpus mean
     * (decimal-exact, deterministic aggregation): a correlated corpus
     * concentrates on one side of origin-crossing hyperplanes, making
@@ -594,12 +587,41 @@ object SimilaritySearch {
   /** The centroid table as ONE row: `_cells`, the cell_id-sorted
     * (cell_id LONG, centroid, cnorm) structs [[graft.functions.TopCells]]
     * reads. cell_id rides as long through the kernel; callers cast
-    * the picks back. */
+    * the picks back. The row's cell count and dimension pass
+    * [[requireCellTableFits]] before it leaves its task. */
   private def packCells(centroids: DataFrame): DataFrame =
     centroids.agg(array_sort(collect_list(struct(
-      col("cell_id").cast("long").as("cell_id"),
-      col("centroid").cast("array<double>").as("centroid"),
-      l2Norm(col("centroid")).as("cnorm")))).as("_cells"))
+        col("cell_id").cast("long").as("cell_id"),
+        col("centroid").cast("array<double>").as("centroid"),
+        l2Norm(col("centroid")).as("cnorm")))).as("_cells"),
+      count(lit(1)).as("_n"),
+      coalesce(max(size(col("centroid"))), lit(0)).as("_dim"))
+      .filter(cellTableFits(col("_n"), col("_dim")))
+      .select(col("_cells"))
+
+  /** Largest centroid table [[packCells]] and [[packTable]] build:
+    * the table is one row that the driver and every executor hold
+    * whole, and a single Spark row cannot pass 2 GiB. 1 GiB keeps
+    * 65,536 cells at dim 1,024, or 262,144 cells at dim 128. */
+  private[operators] val MaxCellTableBytes: Long = 1L << 30
+
+  /** The centroid-table size guard: `cells × (dim + 2) × 8 B` (the
+    * doubles of each centroid plus its cell_id and cnorm) must not
+    * pass [[MaxCellTableBytes]]. Checked from the counts alone,
+    * before any table exists. */
+  private[operators] def requireCellTableFits(cells: Long,
+      dim: Long): Unit = {
+    val bytes = BigInt(cells) * (BigInt(dim) + 2) * 8
+    require(bytes <= MaxCellTableBytes,
+      s"centroid table of cells = $cells, dim = $dim needs $bytes B " +
+      s"(cells × (dim + 2) × 8), above the $MaxCellTableBytes B cap: " +
+      "use fewer cells or a lower dimension")
+  }
+
+  private val cellTableFits = udf { (cells: Long, dim: Int) =>
+    requireCellTableFits(cells, dim)
+    true
+  }
 
   /** The IVF fine scan: probe-cell assignment on both sides, join
     * on cell_id, per-query top-k through the dedup heap
@@ -712,7 +734,8 @@ object SimilaritySearch {
     * 262144-cell cap keeps the broadcast centroid table bounded
     * (256k × dim doubles ≈ low hundreds of MB at dim 128 — the cap
     * a 1000-executor cluster tolerates; probe-side centroid ranking
-    * stays a per-row broadcast loop). */
+    * stays a per-row broadcast loop). At the cap, dim 1,024 needs
+    * 2.15 GB and [[requireCellTableFits]] refuses it. */
   def coarseCellCountScaled(n: Long, minCells: Int = 16,
       maxCells: Int = 262144): Int = {
     require(n >= 0, s"n must be >= 0 ($n)")
@@ -826,7 +849,9 @@ object SimilaritySearch {
     * it, the same (cell_id, centroid, cnorm) structs [[packCells]]
     * builds from a frame: cell_id order, cnorm the sequential-fold
     * norm, and a NULL element read as 0.0 as the kernel reads it. */
-  private def packTable(cents: Array[Array[java.lang.Double]]): ArrayData =
+  private def packTable(cents: Array[Array[java.lang.Double]]): ArrayData = {
+    requireCellTableFits(cents.length,
+      if (cents.isEmpty) 0 else cents.map(_.length).max)
     new GenericArrayData(cents.indices.map { c =>
       val x = cents(c).map(e => if (e == null) 0.0 else e.doubleValue)
       var self = 0.0
@@ -834,6 +859,7 @@ object SimilaritySearch {
       InternalRow(c.toLong, UnsafeArrayData.fromPrimitiveArray(x),
         math.sqrt(self))
     })
+  }
 
   /** One Lloyd round: each task assigns its rows to their best cell of
     * the broadcast table and sums them into per-cell exact means; the

@@ -84,14 +84,6 @@ object SparseBm25 {
   def fastembedTokenId(tok: Column): Column =
     abs(graft.functions.Hashing.murmur3(tok).cast("long"))
 
-  /** Oracle-expressible token id (md5-prefix device): same
-    * distributional properties, reproducible in any engine with md5
-    * — the registered q116 uses this so DuckDB can re-derive the id
-    * space; [[fastembedTokenId]] is the production default and is
-    * spec-checked against mmh3 vectors. */
-  def md5TokenId(tok: Column): Column =
-    conv(substring(md5(tok), 1, 8), 16, 10).cast("long")
-
   /** Sparse-embed every document: (idCol, n_terms, indices, values),
     * indices ascending, values aligned. Colliding token ids within a
     * document sum their weights (decimal-exact, order-independent).

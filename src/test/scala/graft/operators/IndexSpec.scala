@@ -1,6 +1,15 @@
 package graft.operators
 
-import graft.SparkTestBase
+import java.nio.file.{Files, Path => NioPath}
+import java.nio.file.attribute.PosixFilePermissions
+
+import scala.jdk.CollectionConverters._
+
+import graft.{Graft, SparkTestBase}
+import graft.io.PosixLocalFileSystem
+import org.apache.commons.io.FileUtils
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.functions._
 
 /** Index build / delete / count semantics (S7, V6-V8, D2). */
@@ -61,6 +70,105 @@ class IndexSpec extends SparkTestBase {
     val dir = java.nio.file.Files.createTempDirectory("idx").toString
     Index.write(Index.buildPoints(chunks), dir, buckets = 4)
     assert(Index.count(spark, dir) === 3)
+  }
+
+  /** The command lines of the processes the JVM starts while `body`
+    * runs (JFR's `jdk.ProcessStart`). */
+  private def processStarts(body: => Unit): Seq[String] = {
+    val rec = new jdk.jfr.Recording()
+    try {
+      rec.enable("jdk.ProcessStart")
+      rec.start()
+      body
+      rec.stop()
+      val f = Files.createTempFile("process-starts", ".jfr")
+      try {
+        rec.dump(f)
+        jdk.jfr.consumer.RecordingFile.readAllEvents(f).asScala.toSeq
+          .filter(_.getEventType.getName == "jdk.ProcessStart")
+          .map(e => s"${e.getThread("eventThread").getJavaName}: " +
+            e.getString("command"))
+      } finally Files.delete(f)
+    } finally rec.close()
+  }
+
+  private def children(dir: NioPath): Seq[NioPath] = {
+    val s = Files.list(dir)
+    try s.iterator().asScala.toList finally s.close()
+  }
+
+  private def octal(s: String): Short = Integer.parseInt(s, 8).toShort
+
+  private def mode(p: NioPath): String =
+    PosixFilePermissions.toString(Files.getPosixFilePermissions(p))
+
+  test("writeIndex forks no process and writes one part file per " +
+      "bucket, with Hadoop's modes and the built points") {
+    import spark.implicits._
+    val many = (0 until 400).map(i => (f"DOC_M_$i%08d", s"f${i % 7}.md",
+        "markdown", "graft", s"h$i", i, "1", s"passage: [DOC_M] $i",
+        Array.tabulate(8)(j => math.sin(i * 8.0 + j))))
+      .toDF("chunk_id", "source_file", "type", "engine", "hash",
+        "chunk_index", "page", "chunk", "embedding")
+      .repartition(4)
+    val tmp = Files.createTempDirectory("idx")
+    val dir = tmp.resolve("index")
+    try {
+      // processes started on the index's files (Spark's heartbeater
+      // forks `getconf PAGESIZE` once per JVM, at a time of its own)
+      val starts = processStarts(Graft.writeIndex(many, dir.toString))
+        .filter(_.contains(dir.toString))
+      assert(starts.isEmpty, s"${starts.size} process starts: " +
+        starts.take(3).mkString("; "))
+
+      val buckets = children(dir).filter(Files.isDirectory(_))
+      assert(buckets.map(_.getFileName.toString).toSet ===
+        (0 until 64).map(b => s"bucket=$b").toSet)
+      buckets.foreach { b =>
+        val parts = children(b).map(_.getFileName.toString)
+          .filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
+        assert(parts.size === 1, s"$b holds $parts")
+      }
+      // modes set through setPermission: Hadoop's 0666/0777 under its
+      // 022 umask (checksum files take the process umask and are left
+      // out)
+      val walk = Files.walk(dir)
+      val all = try walk.iterator().asScala.toList finally walk.close()
+      all.filter(Files.isDirectory(_)).foreach(d =>
+        assert(mode(d) === "rwxr-xr-x", d))
+      all.filterNot(p => Files.isDirectory(p) ||
+          p.getFileName.toString.endsWith(".crc"))
+        .foreach(f => assert(mode(f) === "rw-r--r--", f))
+
+      val back = spark.read.parquet(dir.toString)
+      assert(back.filter(col("bucket") =!=
+        pmod(xxhash64(col("point_id")), lit(64))).count() === 0)
+      val want = Index.buildPoints(many)
+      val got = back.select(want.columns.map(col).toSeq: _*)
+      assert(got.count() === 400)
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
+    } finally FileUtils.deleteDirectory(tmp.toFile)
+  }
+
+  test("PosixLocalFileSystem is the session's file: filesystem; a " +
+      "mode above 0777 keeps Hadoop's own path") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    assert(FileSystem.get(new java.net.URI("file:///"), conf)
+      .isInstanceOf[PosixLocalFileSystem])
+    val fs = new PosixLocalFileSystem
+    fs.initialize(new java.net.URI("file:///"), conf)
+    val d = Files.createTempDirectory("modes")
+    try {
+      fs.setPermission(new Path(d.toUri), new FsPermission(octal("750")))
+      assert(mode(d) === "rwxr-x---")
+      // NIO cannot set the sticky bit: 01777 must reach chmod
+      fs.setPermission(new Path(d.toUri), new FsPermission(octal("1777")))
+      assert((Files.getAttribute(d, "unix:mode").asInstanceOf[Int] &
+        octal("7777")) === octal("1777"))
+    } finally {
+      fs.close()
+      Files.delete(d)
+    }
   }
 
   test("deleteBySourceFile / deleteByIds rebuild semantics (V6/D3)") {

@@ -420,6 +420,26 @@ class SimilaritySpec extends SparkTestBase {
     assert(coarseCellCountScaled(0L) === 16)
   }
 
+  test("centroid-table guard: cells × (dim + 2) × 8 B above 1 GiB " +
+      "fails from the counts alone, naming cells and dim") {
+    import SimilaritySearch.{MaxCellTableBytes, requireCellTableFits}
+    // the 262,144-cell cap at dim 1,024: a 2.15 GB table, never built
+    val e = intercept[IllegalArgumentException](
+      requireCellTableFits(262144, 1024))
+    assert(e.getMessage.contains("cells = 262144"), e.getMessage)
+    assert(e.getMessage.contains("dim = 1024"), e.getMessage)
+    assert(e.getMessage.contains("2151677952 B"), e.getMessage)
+    requireCellTableFits(65536, 1024)
+    requireCellTableFits(262144, 128)
+    requireCellTableFits(0, 0)
+    // exact at the boundary: 1,024 cells × (131,070 + 2) × 8 B = 1 GiB
+    assert(BigInt(1024) * (131070 + 2) * 8 === BigInt(MaxCellTableBytes))
+    requireCellTableFits(1024, 131070)
+    intercept[IllegalArgumentException](requireCellTableFits(1024, 131071))
+    intercept[IllegalArgumentException](
+      requireCellTableFits(Long.MaxValue, Long.MaxValue))
+  }
+
   test("probeCountScaled is the exact integer min{p : p^6 >= a*n} " +
       "with clamps — the q331 recall-holding probe rule") {
     import SimilaritySearch.probeCountScaled
