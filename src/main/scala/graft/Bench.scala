@@ -97,7 +97,7 @@ object Bench {
       }
       .getOrElse(3)
     // r12: per-query passes force FULL evaluation of every output
-    // column (Force.fullEval, the ScaleBench discipline) instead of
+    // column (Force.fullEval) instead of
     // count() — count-forcing let Catalyst prune unreferenced
     // expression work and under-measured projection-heavy rows (the
     // cka_64 lesson, NOTES r11). Contract note for cross-round

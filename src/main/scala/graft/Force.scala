@@ -11,11 +11,11 @@ import org.apache.spark.sql.types._
   * expressions, a final decimal cast — so a count-timed bench row
   * under-measures expression-heavy plans (r11 NOTES: the cka_64 row
   * read 2.4 s count-pruned vs 25 s actually evaluated). The honest
-  * forcing hashes EVERY output column into one aggregate, which is
-  * what ScaleBench has always used; as of r12 the per-round Bench
-  * uses it too (coordinated in NOTES — BENCH_r12 rows are therefore
-  * not directly comparable to count-forced BENCH_r11 rows for
-  * expression-heavy queries; the calibration sentinel is unchanged).
+  * forcing hashes EVERY output column into one aggregate; as of r12
+  * the per-round Bench uses it (coordinated in NOTES — BENCH_r12
+  * rows are therefore not directly comparable to count-forced
+  * BENCH_r11 rows for expression-heavy queries; the calibration
+  * sentinel is unchanged).
   *
   * The hash aggregate itself is one codegen'd pass over the result —
   * negligible next to any real query, and identical work per row

@@ -2,36 +2,15 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.{AsOfJoin, Dedup, ProductQuantization, RangeJoin,
-  SimilaritySearch}
 
-/** Scaling benchmark: banded-LSH near-dup mining vs the exhaustive
-  * pair scans at 1×/2×/4× the sf0.1 corpus, to separate fixed stage
-  * overhead from scaling cost (the per-round Bench at one SF cannot —
-  * its heavies are dominated by constant stage/codegen setup).
-  *
-  * The scaled corpora are derived deterministically: replica r of a
-  * document appends a replica-specific token (new content, same
-  * statistics); replica r of an embedding perturbs the first
-  * component by 0.01·r (new vector, same geometry). So the work
-  * grows exactly ×K while the data distribution stays comparable.
-  *
-  * Usage: SPARK_GRAFT_SF_DIR=... runMain graft.ScaleBench
-  * Prints one JSON line per (query, K) with seconds and result rows.
+/** K×-scaled copies of a testdata directory's corpus tables, derived
+  * deterministically so the work grows exactly ×K while the data
+  * distribution stays comparable: replica r of a document appends a
+  * replica-specific token (new content, same statistics); replica r
+  * of an embedding perturbs the first component by 0.01·r (new
+  * vector, same geometry). Ids are offset by r·1,000,000 per replica.
   */
 object ScaleBench {
-
-  private def time[T](f: => T): (Double, T) = {
-    val t0 = System.nanoTime()
-    val r = f
-    ((System.nanoTime() - t0) / 1e9, r)
-  }
-
-  /** Full-evaluation forcing (count() alone lets the optimizer prune
-    * operators whose columns nothing references, e.g. the Window
-    * inside the union+window as-of). Shared with Bench since r12 —
-    * see graft.Force. */
-  private def fullEval(df: DataFrame): Long = Force.fullEval(df)
 
   def scaledDocs(spark: SparkSession, dir: String, k: Int): DataFrame = {
     val base = spark.read.parquet(s"$dir/documents.parquet")
@@ -53,725 +32,5 @@ object ScaleBench {
           slice(col("embedding"), lit(2), size(col("embedding")) - 1))
           .as("embedding"))
     }.reduce(_ unionByName _)
-  }
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env("SPARK_GRAFT_SF_DIR")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.build(s"local[$cpus]", cpus.toInt)
-    // args: [comma-separated scale factors] [substring filter on bench names]
-    val scales = args.headOption.map(_.split(",").toSeq.map(_.toInt))
-      .getOrElse(Seq(1, 2, 4))
-    val nameFilter = args.drop(1).headOption.getOrElse("")
-    for (k <- scales) {
-      val docs = scaledDocs(spark, sfDir, k).persist()
-      val emb = scaledEmbeddings(spark, sfDir, k).persist()
-      docs.count(); emb.count() // materialize outside the timings
-      // events replicas: shift each replica by r days so the stream
-      // grows in span as well as volume (time-join state stays local)
-      val events = {
-        val base = graft.queries.Tables.events(spark, sfDir)
-          .select(col("event_id"), col("user_id"), col("event_type"),
-            unix_micros(col("ts")).as("t_us"), col("value"))
-        (0 until k).map(r =>
-          base.select((col("event_id") + lit(r * 10000000L)).as("event_id"),
-            col("user_id"), col("event_type"),
-            (col("t_us") + lit(r * 86400000000L)).as("t_us"),
-            col("value"))).reduce(_ unionByName _)
-      }.persist()
-      events.count()
-      val purchases = events.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("t_us"))
-      val views = events.filter(col("event_type") === "view")
-        .select(col("event_id"), col("user_id"), col("t_us"),
-          col("value"))
-      // IVFADC: index built once (its own timing row), probes reuse
-      // it. Cells scale as √n and both quantizers train on a bounded
-      // deterministic sample — the 100 TB sizing contract.
-      lazy val ivfadcParts = {
-        val nCells = SimilaritySearch.coarseCellCount(emb.count())
-        val cents = SimilaritySearch.kmeansCentroids(
-          emb, "vec_id", "embedding", k = nCells, maxIter = 3,
-          maxTrain = 16384)
-        val cb = ProductQuantization.codebooksKmeans(
-          emb, "vec_id", "embedding", m = 8, kCodes = 16, maxIter = 3,
-          maxTrain = 16384)
-        val idx = ProductQuantization.ivfadcIndex(
-          emb, "vec_id", "embedding", cents, cb, m = 8).persist()
-        (cents, cb, idx)
-      }
-      // packing comparisons: "rows" = bins produced (fewer = denser)
-      lazy val docTokens = docs.select(col("doc_id"),
-        graft.functions.TextFunctions.tokenCount(col("text"))
-          .cast("long").as("n_tokens")).persist()
-      val runs: Seq[(String, () => Long)] = Seq(
-        "pack_window" -> (() =>
-          graft.operators.Packing.packSequences(docTokens, "doc_id",
-            "n_tokens", budget = 2048, shards = 32)
-            .select("bin").distinct().count()),
-        "pack_nextfit" -> (() =>
-          graft.operators.Packing.packSequencesNextFit(docTokens,
-            "doc_id", "n_tokens", budget = 2048, shards = 32)
-            .select("bin").distinct().count()),
-        "bm25_percall" -> (() => {
-          val qs = docs.limit(5)
-            .select(col("doc_id").as("qid"),
-              substring(col("text"), 1, 80).as("qtext"))
-          graft.operators.Hybrid.bm25(docs, "doc_id", "text",
-            qs, "qid", "qtext").count()
-        }),
-        "bm25_index_build" -> (() => {
-          graft.operators.TextIndex.build(docs, "doc_id", "text",
-            s"graft_sb_idx_k$k")
-          spark.table(s"graft_sb_idx_k$k").count()
-        }),
-        "bm25_index_probe" -> (() => {
-          val qs = docs.limit(5)
-            .select(col("doc_id").as("qid"),
-              substring(col("text"), 1, 80).as("qtext"))
-          graft.operators.TextIndex.bm25(spark, s"graft_sb_idx_k$k",
-            qs, "qid", "qtext").count()
-        }),
-        "ivfadc_build" -> (() => ivfadcParts._3.count()),
-        "ivfadc_probe50" -> (() => {
-          val (cents, cb, idx) = ivfadcParts
-          graft.operators.ProductQuantization.ivfadcTopK(
-            emb.limit(50), "vec_id", emb, "vec_id", "embedding",
-            cents, cb, idx, m = 8, kCodes = 16, k = 10, nProbe = 8,
-            rerank = 5).count()
-        }),
-        // fair action for the asof/range comparisons: a checksum over
-        // every output column. count() alone is NOT fair here —
-        // Catalyst prunes the unused Window (and then the sort) out
-        // of the union+window form under count(), but the custom exec
-        // cannot be pruned, so count() compared a gutted plan against
-        // a full one (this is exactly how the r04 "4x gap" arose; the
-        // fair comparison has the codegen merge BEATING the window
-        // form at K=64: 1.13 s vs 1.3-1.5 s warm).
-        "asof_join" -> (() => fullEval(
-          AsOfJoin.asOf(purchases, views, Seq("user_id"), "t_us",
-            "event_id", Seq("t_us", "value")))),
-        "asof_merge" -> (() => fullEval(
-          AsOfJoin.asOfMerge(purchases, views, Seq("user_id"), "t_us",
-            "event_id", Seq("t_us", "value")))),
-        "range_join_1h" -> (() => fullEval(
-          RangeJoin.rangeJoin(purchases, views, Seq("user_id"),
-            "t_us", "t_us", -3600000000L, -1L, Seq("value")))),
-        "knn_float_heap" -> (() =>
-          SimilaritySearch.bruteForceTopKHeap(
-            emb.limit(50), "vec_id", emb, "vec_id", "embedding",
-            k = 10).count()),
-        "knn_int8_heap" -> (() =>
-          SimilaritySearch.quantizedTopK(
-            emb.limit(50), "vec_id", emb, "vec_id", "embedding",
-            k = 10).count()),
-        "bigram_lm" -> (() =>
-          graft.operators.LanguageModel.bigramSurprisal(docs,
-            "doc_id", "text").count()),
-        "dsir_weights" -> (() =>
-          graft.operators.Importance.dsirWeights(docs, "doc_id",
-            "text", col("doc_id") % 2 === 0).count()),
-        "span_rewrite" -> (() =>
-          Dedup.dropDuplicateSpans(docs, "doc_id", "text", n = 5)
-            .count()),
-        // char-level repeated spans (ExactSubstr approx): the work is
-        // the stride-1 window stream — K× docs → K× windows through
-        // ONE exchange; the island tail sees only repeated positions.
-        // NOTE the K≥2 corpora are maximally duplicated by
-        // construction (each replica shares its base doc's full
-        // text), so this row times the WORST duplication case: every
-        // position repeated, the island tail at full width.
-        "repeated_spans" -> (() =>
-          Dedup.repeatedCharSpans(docs, "doc_id", "text", window = 48)
-            .count()),
-        // winnowed selection (r6): same window stream, but only the
-        // ~2/(winnow+1) MOSS-selected fingerprints reach the corpus-
-        // wide exchange — the implemented fingerprint-before-shuffle
-        // path; compare directly against repeated_spans above.
-        "winnowed_fingerprints" -> (() =>
-          Dedup.winnowedFingerprints(docs, "doc_id", "text",
-            window = 48, winnow = 8).count()),
-        "phrase_percall" -> (() =>
-          graft.operators.Hybrid.phraseMatches(docs, "doc_id", "text",
-            "table value").count()),
-        // SemDeDup at the paper's √n cell sizing: cluster with
-        // k-means (bounded training sample), assign, dedup within
-        // cells — the quadratic stays inside √n-sized cells.
-        "semdedup_sqrtn" -> (() => {
-          val nCells = SimilaritySearch.coarseCellCount(emb.count())
-          val cents = SimilaritySearch.kmeansCentroids(
-            emb, "vec_id", "embedding", k = nCells, maxIter = 3,
-            maxTrain = 16384)
-          val assignW = org.apache.spark.sql.expressions.Window
-            .partitionBy(col("vec_id"))
-            .orderBy(desc("_sc"), col("cell_id"))
-          val assigned = emb.crossJoin(broadcast(cents))
-            .withColumn("_sc", graft.functions.VectorFunctions
-              .cosine(col("embedding"), col("centroid")))
-            .withColumn("_r", row_number().over(assignW))
-            .filter(col("_r") === 1)
-            .select(col("vec_id"), col("embedding"), col("cell_id"))
-          SimilaritySearch.semDedup(assigned, "vec_id", "embedding",
-            "cell_id", threshold = 0.95).filter(col("keep")).count()
-        }),
-        // fuzzy matching over a synthetic large name universe: K
-        // replicas of the part names with per-replica typo suffixes
-        // (the scaled entity-resolution workload; the residual path
-        // and the q-gram index both grow with distinct names).
-        "fuzzy_names" -> (() => {
-          val base = spark.read
-            .parquet(s"$sfDir/part.parquet").select(col("p_name"))
-          val names = (0 until k).map(r =>
-            base.select(concat(col("p_name"), lit(s" v$r"))
-              .as("name"))).reduce(_ unionByName _)
-          Dedup.fuzzyMatches(names, "name", maxDist = 2).count()
-        }),
-        // r11: the q239 bipartite device — 3rd-char-dropped probes
-        // vs the scaled catalog
-        "fuzzy_join" -> (() => {
-          val base = spark.read.parquet(s"$sfDir/part.parquet")
-            .select(col("p_partkey"), col("p_name"))
-          val parts = (0 until k).map(r =>
-            base.select((col("p_partkey") + lit(r * 1000000L))
-                .as("p_partkey"),
-              concat(col("p_name"), lit(s" v$r")).as("p_name")))
-            .reduce(_ unionByName _)
-          val probes = parts.filter(col("p_partkey") % 10 === 0)
-            .select(col("p_partkey").as("probe_key"),
-              concat(substring(col("p_name"), 1, 2),
-                substring(col("p_name"), 4, 1 << 20))
-                .as("probe_name"))
-          Dedup.fuzzyJoin(probes, "probe_key", "probe_name",
-            parts, "p_partkey", "p_name", maxDist = 2).count()
-        }),
-        // r11: the q305 shortlist device — multi-modal candidate
-        // union (√n-cell sample-quantizer IVF + NN-descent graph)
-        // feeding the margin arithmetic; the EXACT cross-score form
-        // is deliberately absent here (it is the quadratic truth)
-        "margin_shortlist" -> (() => {
-          val cand = SimilaritySearch.parityMarginCandidates(emb,
-            "vec_id", "embedding")
-          SimilaritySearch.marginMiningShortlist(
-            emb.filter(col("vec_id") % 2 === 0), "vec_id",
-            emb.filter(col("vec_id") % 2 === 1), "vec_id",
-            "embedding", cand, k = 4,
-            marginThreshold = 1.0).count()
-        }),
-        // r11: the q299 multi-pass record-linkage blocking at scale
-        // — the SAME linkagePairs construction the registered query
-        // runs, so the row measures the registered shape
-        "record_linkage_em3" -> (() => {
-          val base = spark.read.parquet(s"$sfDir/customer.parquet")
-            .select(col("c_custkey"), col("c_name"), col("c_acctbal"))
-          val cust = (0 until k).map(r =>
-            base.select((col("c_custkey") + lit(r * 10000000L))
-                .as("c_custkey"),
-              concat(col("c_name"), lit(s" v$r")).as("c_name"),
-              (col("c_acctbal") + lit(r * 0.01)).as("c_acctbal")))
-            .reduce(_ unionByName _)
-          graft.operators.RecordLinkage.emFit(
-            graft.queries.GovernanceQueries.linkagePairs(cust),
-            Seq("agree_name", "agree_bal", "agree_cents"),
-            rounds = 3).count()
-        }),
-        // composed web-curation build (q242 class, r9): page-metadata
-        // extraction → noindex drop → jusText block classification +
-        // main-content assembly → canonical-URL dedup. The work is
-        // per-row regex chains + one per-doc window + one keyed agg —
-        // must scale linearly; canonical groups collapse replicas
-        // (doc_id mod keys repeat across replicas), so the dedup tail
-        // is constant-size while the extraction front is K×.
-        "web_curation" -> (() => {
-          val pages = docs.select(col("doc_id"),
-            concat(lit("<html><head><title>Doc "),
-              col("doc_id").cast("string"), lit("</title>"),
-              when(col("doc_id") % 7 === 0, lit(
-                "<meta name=\"robots\" content=\"noindex\">"))
-                .otherwise(lit("")),
-              lit("</head><body><nav><a href=\"/\">Home</a> " +
-                "<a href=\"/a\">About</a></nav><h1>E</h1><p>"),
-              col("text"),
-              lit("</p><footer>C <a href=\"/t\">T</a></footer>" +
-                "</body></html>")).as("html"),
-            concat(lit("https://h"),
-              (col("doc_id") % 97).cast("string"),
-              lit(".example.com/p/"),
-              (col("doc_id") % 1000).cast("string"),
-              lit("?utm_source=x&b=2&a=1")).as("url"))
-            .localCheckpoint() // 3 consumer branches (q242 discipline)
-          val meta = graft.operators.Boilerplate
-            .htmlMeta(pages, "doc_id", "html")
-          val kept = pages.join(meta.select(col("doc_id"),
-              col("noindex")), Seq("doc_id"))
-            .filter(!col("noindex"))
-          val main = graft.operators.Boilerplate.mainContent(
-            kept.select(col("doc_id"), col("html")), "doc_id",
-            "html")
-          val canon = kept.withColumn("c",
-              graft.operators.Corpus.canonicalizeUrl(col("url")))
-            .groupBy(col("c"))
-            .agg(min(col("doc_id")).as("doc_id"))
-          canon.join(main, Seq("doc_id"), "left").count()
-        }),
-        // composed corpus build (q126): quality funnel + exact keeper
-        // → banded near-dup removal, over K corpus replicas WITH
-        // lang/source retained. NOTE: replicas of one base doc are
-        // near-duplicates of each other by construction (3-shingles
-        // almost fully shared), so K≥2 times the build under MAXIMAL
-        // near-duplication — the LSH/verify/components tail at full
-        // candidate width, the worst realistic case.
-        "corpus_build" -> (() => {
-          val base = spark.read.parquet(s"$sfDir/documents.parquet")
-            .select(col("doc_id"), col("lang"), col("source"),
-              col("text"))
-          val scaled = (0 until k).map(r =>
-            base.select((col("doc_id") + lit(r * 1000000L))
-              .as("doc_id"), col("lang"), col("source"),
-              concat(col("text"), lit(s" replica$r")).as("text")))
-            .reduce(_ unionByName _)
-          graft.queries.TextQueries.corpusBuild(scaled).count()
-        }),
-        // r6 additions. paragraph dedup: the corpus docs are single-
-        // paragraph, so K≥2 replays exact-doc dedup at K× scale
-        // (replica texts differ → K× distinct paragraphs).
-        "paragraph_dedup" -> (() =>
-          Dedup.dropDuplicateParagraphs(docs, "doc_id", "text")
-            .count()),
-        // all 13 Gopher repetition signals: ~9 gram streams per doc
-        // through per-(doc,n,gram) aggregates — embarrassingly
-        // parallel across docs, so the row must scale linearly.
-        "gopher_repetition" -> (() =>
-          graft.operators.Repetition.signals(docs, "doc_id", "text")
-            .count()),
-        "containment_pairs" -> (() =>
-          Dedup.containmentPairs(docs, "doc_id", "text", shingleN = 3,
-            maxDf = 50, threshold = 0.9).count()),
-        // bloom decontamination under WORST-CASE contamination: every
-        // train replica shares nearly all 5-grams with some test-side
-        // doc (replicas differ only in the appended token), so the
-        // bloom prefilter passes almost everything through to the
-        // exact verify — this times the verify join at full width,
-        // not the (cheap) clean-corpus fast path.
-        "bloom_decontaminate" -> (() => {
-          val tr = docs.filter(col("doc_id") % 5 =!= 0)
-          val te = docs.filter(col("doc_id") % 5 === 0)
-          Dedup.bloomDecontaminate(tr, te, "doc_id", "text", n = 5)
-            .filter(col("is_contaminated")).count()
-        }),
-        // per-pair BLEU is a pure map stage (in-row clipped counts);
-        // worst case per row is ref == cand (every distinct gram
-        // matches). The row must scale linearly with docs.
-        // r11 governance/calibration families — every one must be
-        // data-linear: diversity/impact are single QI aggregates (+
-        // an m-row-per-group rank window), isotonic is one binning
-        // aggregate + constant bin algebra, conformal's only
-        // data-sized step is the calibration-slice sort, DP is one
-        // user-keyed window + a group aggregate, CKA is the two
-        // fixed-d covariance passes, the quantile row is two
-        // aggregate passes (sketch + rank check).
-        "diversity_audit" -> (() =>
-          fullEval(graft.operators.Privacy.diversityAudit(
-            events.select(pmod(col("event_id"), lit(97)).as("qi"),
-              col("event_type")),
-            Seq(col("qi")), Seq("qi"), col("event_type"),
-            l = 3, c = 2))),
-        "disparate_impact" -> (() =>
-          fullEval(graft.operators.Fairness.disparateImpact(
-            docs.select(pmod(col("doc_id"), lit(7)).as("g"),
-              (length(col("text")) % 5 =!= 0).as("ok")),
-            col("g"), "g", col("ok")))),
-        "isotonic_fit" -> (() =>
-          fullEval(graft.operators.Calibration.isotonicFit(
-            docs.select(
-              (pmod(col("doc_id") * 2654435761L, lit(1000L))
-                .cast("double") / 1000.0).as("s"),
-              (length(col("text")) % 3 === 0).as("y")),
-            col("s"), col("y"), bins = 20))),
-        "conformal_2a" -> (() => {
-          val scored = docs.select(col("doc_id"),
-            (pmod(col("doc_id") * 40503L, lit(10000L))
-              .cast("double") / 10000.0).as("nc"),
-            (pmod(col("doc_id"), lit(5)) === 0).as("is_cal"))
-          fullEval(graft.operators.Calibration.conformalThresholds(
-            scored.filter(col("is_cal")),
-            scored.filter(!col("is_cal")),
-            col("nc"), col("doc_id"), alphas = Seq(0.1, 0.25)))
-        }),
-        "dp_bounded" -> (() =>
-          fullEval(graft.operators.Privacy.laplaceRelease(
-            graft.operators.Privacy.boundContribution(
-              events.select(col("user_id"), col("event_id")),
-              col("user_id"), col("event_id"), cap = 5),
-            Seq(pmod(col("user_id"), lit(50))), Seq("g"),
-            epsilon = 1.0, seed = "sb:", sensitivity = 5.0))),
-        // r12: RHO excess-loss selection — the distinct-excess table
-        // is value-cardinality-bounded (≤ ~20k t9 values here) at
-        // any K, so the only data-sized work is the one scored-frame
-        // groupBy; wall time should stay ~flat in K per row scanned
-        "rho_select" -> (() =>
-          fullEval(graft.operators.Reweighting.excessLossSelect(
-            docs.select(col("doc_id"),
-              (pmod(col("doc_id") * 2654435761L, lit(10000L))
-                .cast("double") / 1000.0).as("l"),
-              (pmod(col("doc_id") * 40503L, lit(10000L))
-                .cast("double") / 1000.0).as("r")),
-            "doc_id", "l", "r", rho = 0.25))),
-        // r12: pass@k + consensus over a 10-sample candidate frame
-        // derived from the scaled docs — one map-side-combining
-        // aggregate each; candidate strings never enter a shuffle
-        "eval_harness" -> (() => {
-          val cand = docs.select(col("doc_id").as("p"),
-              explode(sequence(lit(0L), lit(9L))).as("s"))
-            .withColumn("ok",
-              pmod(col("p") * 31L + col("s") * 7L, lit(10L)) < 6)
-            .withColumn("ans",
-              when(col("ok"), col("p") % 5).otherwise(col("s") % 5)
-                .cast("string"))
-          fullEval(graft.operators.Eval.passAtK(
-            cand, col("p"), col("ok"), Seq(1, 5, 10))) +
-          fullEval(graft.operators.Eval.consensusVote(
-            cand, col("p"), col("ans"), col("ok")))
-        }),
-        // r12.2: GRPO advantage + best-of-n over an 8-sample reward
-        // frame (one moment aggregate + join back; rank window +
-        // bounded fold), dedup-aware pass@k (counts pass + two
-        // problem-table aggregates), per-variant chi-squared over a
-        // 5-way exploded grid (one corpus pass)
-        "rl_analytics" -> (() => {
-          val rw = docs.select(col("doc_id").as("p"),
-              explode(sequence(lit(0L), lit(7L))).as("s"))
-            .withColumn("r",
-              pmod(col("p") * 131L + col("s") * 17L, lit(1000L))
-                .cast("double") / 1000.0)
-          fullEval(graft.operators.Eval.groupNormalizedAdvantage(
-            rw, col("p"), col("s"), col("r"))) +
-          fullEval(graft.operators.Eval.bestOfNCurve(
-            rw, col("p"), col("s"), col("r"), Seq(1, 4, 8)))
-        }),
-        "dedup_pass_at_k" -> (() => {
-          val cand = docs.select(col("doc_id").as("p"),
-              explode(sequence(lit(0L), lit(9L))).as("s"))
-            .withColumn("ok",
-              pmod(col("p") * 31L + col("s") * 7L, lit(10L)) < 6)
-          val clusters = cand.select(col("p").as("problem")).distinct()
-            .withColumn("cluster",
-              col("problem") - pmod(col("problem"), lit(64L)))
-          fullEval(graft.operators.Eval.passAtKDedupAware(
-            cand, col("p"), col("ok"), clusters, Seq(1, 5, 10)))
-        }),
-        "chi_squared_by5" -> (() =>
-          fullEval(graft.operators.HypothesisTests
-            .chiSquaredIndependenceBy(
-              docs.select(
-                pmod(col("doc_id") * 31L, lit(5L)).as("rcat"),
-                pmod(col("doc_id") * 2654435761L, lit(4L)).as("c"),
-                explode(array((0 until 5).map(v =>
-                  lit(s"v$v")): _*)).as("variant")),
-              col("variant"), col("rcat"), col("c"), 21.026))),
-        "cka_64" -> (() =>
-          fullEval(graft.operators.Cka.linearCka(
-            emb.select(col("embedding").as("x"),
-              transform(col("embedding"), v => v * 0.5 + 0.1)
-                .as("y")),
-            col("x"), col("y"), d = 64))),
-        "approx_quantiles" -> (() => {
-          val vals = events.select(col("value").cast("double")
-            .as("v")).filter(col("v").isNotNull)
-          val qs = Seq(0.1, 0.5, 0.9)
-          val ests = vals.agg(expr(
-              "approx_percentile(v, array(0.1D, 0.5D, 0.9D), 1000)")
-              .as("es"), count(lit(1)).as("n"))
-            .select(posexplode(col("es")).as(Seq("qi", "est")),
-              col("n"))
-            .select(element_at(array(qs.map(lit): _*), col("qi") + 1)
-              .as("q"), col("est"), col("n"))
-          fullEval(graft.operators.Sketches.quantileRankCheck(
-            vals, "v", ests, eps = 0.001))
-        }),
-        "bleu_stats" -> (() =>
-          graft.operators.Eval.bleuStats(
-            docs.select(col("doc_id"), col("text").as("cand"),
-              col("text").as("ref")), "cand", "ref")
-            .agg(sum(col("m4")), count(lit(1))).head.getLong(1)),
-        // MG candidates + exact re-count over the bigram stream:
-        // state stays `capacity` counters/partition no matter how
-        // vocab grows; runtime must track the token stream linearly.
-        "heavy_hitters" -> (() => {
-          val tk = split(col("text"), " ")
-          val bigrams = docs.select(tk.as("tk"))
-            .filter(size(col("tk")) >= 2)
-            .select(explode(transform(
-              sequence(lit(1), size(col("tk")) - 1),
-              i => concat(element_at(col("tk"), i), lit(" "),
-                element_at(col("tk"), i + 1)))).as("term"))
-          graft.operators.HeavyHitters.heavyHitters(bigrams, "term",
-            k = 20, capacity = 1024).count()
-        }),
-        // 5 PageRank rounds over a 2-out-regular synthetic graph on
-        // the scaled doc ids: nodes and edges grow ×K while degree
-        // stays constant, so per-round shuffle volume must track K
-        // linearly (the localCheckpoint chain adds only fixed cost).
-        "pagerank_5r" -> (() => {
-          val cap = lit(1000000L * k)
-          val e1 = docs.select(
-            concat(lit("d"), col("doc_id")).as("src"),
-            concat(lit("d"), pmod(col("doc_id") * 7 + 1, cap)).as("dst"))
-          val e2 = docs.select(
-            concat(lit("d"), col("doc_id")).as("src"),
-            concat(lit("d"), pmod(col("doc_id") * 13 + 5, cap)).as("dst"))
-          fullEval(graft.operators.Graph.pageRank(e1.unionByName(e2)))
-        }),
-        // 5 HITS rounds over the same 2-out-regular synthetic graph as
-        // pagerank_5r: two data-sized jobs per round (one per
-        // direction), max normalizers riding the checkpointed raw
-        // sums — the row must track K linearly like its sibling.
-        "hits_5r" -> (() => {
-          val cap = lit(1000000L * k)
-          val e1 = docs.select(
-            concat(lit("d"), col("doc_id")).as("src"),
-            concat(lit("d"), pmod(col("doc_id") * 7 + 1, cap)).as("dst"))
-          val e2 = docs.select(
-            concat(lit("d"), col("doc_id")).as("src"),
-            concat(lit("d"), pmod(col("doc_id") * 13 + 5, cap)).as("dst"))
-          fullEval(graft.operators.Graph.hits(e1.unionByName(e2)))
-        }),
-        // KMV + HLL sketches over the scaled token stream: state is
-        // k longs / 1024 registers per group regardless of K, so the
-        // row must track the token-stream scan linearly — superlinear
-        // growth would mean the sketch state started spilling into
-        // the shuffle.
-        "sketch_vocab" -> (() => {
-          val toks = docs.select(
-            (col("doc_id") % 5).cast("string").as("lang"),
-            explode(split(col("text"), " ")).as("tok"))
-          graft.operators.Sketches.kmvDistinct(toks, "lang", "tok")
-            .count() +
-            graft.operators.Sketches.hllDistinct(toks, "lang", "tok")
-              .count()
-        }),
-        // BFS frontier expansion over the 2-out-regular graph from a
-        // fixed 1000-seed set, 4 hops: per-round cost is the frontier
-        // join against the pre-partitioned edge table — the row must
-        // track K (edge volume) roughly linearly while round count
-        // stays fixed.
-        "hop_distance_4" -> (() => {
-          val cap = lit(1000000L * k)
-          val e1 = docs.select(
-            concat(lit("d"), col("doc_id")).as("src"),
-            concat(lit("d"), pmod(col("doc_id") * 7 + 1, cap)).as("dst"))
-          val e2 = docs.select(
-            concat(lit("d"), col("doc_id")).as("src"),
-            concat(lit("d"), pmod(col("doc_id") * 13 + 5, cap)).as("dst"))
-          val seeds = docs.filter(col("doc_id") < 1000)
-            .select(concat(lit("d"), col("doc_id")).as("node"))
-          fullEval(graft.operators.Graph.hopDistance(
-            e1.unionByName(e2), seeds, maxHops = 4))
-        }),
-        // connected components on the ADVERSARIAL long-chain graph:
-        // each replica block is one path of ~n nodes, so diameter =
-        // component size — the case plain min-label propagation needs
-        // O(n) rounds for. The pointer-doubling round keeps
-        // convergence at O(log n) rounds (+1 round per doubling of
-        // K), each round linear in nodes: the row must grow
-        // ~K·log(K·n)/log(n), i.e. just above linear.
-        "components_chain" -> (() => {
-          val e = docs.select(
-            concat(lit("d"), col("doc_id")).as("src"),
-            concat(lit("d"), col("doc_id") + 1).as("dst"))
-          fullEval(graft.operators.Graph.connectedComponents(e))
-        }),
-        // triangle counting on an 8-regular circulant graph scaled
-        // ×K: constant degree means the degree-ordered wedge join
-        // grows linearly with edges (Σ C(outdeg,2) per node is
-        // constant) — the row must track K linearly; superlinear
-        // growth would mean the orientation stopped bounding the
-        // wedge enumeration.
-        "triangles" -> (() => {
-          val cap = lit(1000000L * k)
-          val e = (1 to 4).map(s => docs.select(
-              col("doc_id").as("src"),
-              pmod(col("doc_id") + s, cap).as("dst")))
-            .reduce(_ unionByName _)
-          fullEval(graft.operators.Graph.triangleStats(e))
-        }),
-        // prefix doubling on the 2% slice of the scaled corpus:
-        // positions ×K, round count fixed by suffix distinctness
-        // (high-entropy text) — near-linear is the contract.
-        "suffix_ranks" -> (() =>
-          fullEval(graft.operators.SuffixArray.suffixRanks(
-            docs.filter(col("doc_id") % 50 === 0), "doc_id", "text"))),
-        // MaxSim late interaction: fixed 4-query broadcast against a
-        // ×K token table — one data-sized aggregate, linear.
-        "maxsim_top10" -> (() =>
-          fullEval(graft.operators.Ranking.maxSimTopK(
-            emb.filter(col("vec_id") < 4)
-              .select(col("vec_id"),
-                col("embedding").cast("array<float>").as("embedding")),
-            "vec_id",
-            emb.select(col("vec_id"),
-              col("embedding").cast("array<float>").as("embedding")),
-            "vec_id", "embedding", tokens = 8, subDim = 8))),
-        // CDC chunking is a shuffle-free O(n)-per-doc scan: the row
-        // must track corpus chars linearly; superlinear growth would
-        // mean the in-row fold regressed to quadratic (the
-        // CollapseProject hazard Cdc.scala documents).
-        "cdc_chunks" -> (() =>
-          fullEval(graft.operators.Cdc.chunks(docs, "doc_id",
-            "text"))),
-        // conversation assembly over the ×K event stream: two
-        // session-key windows + one sorted-struct aggregate — the
-        // row must track events linearly (user count is fixed, so
-        // per-user work grows ×K but stays one partition's sort).
-        "conversations" -> (() =>
-          fullEval(graft.operators.Sft.assembleConversations(
-            events.withColumn("ts",
-              timestamp_micros(col("t_us"))),
-            "user_id", "ts", "event_id", "event_type"))),
-        // semantic decontamination: corpus ×K against a FIXED
-        // 20-vector broadcast eval set — map-side only, must be
-        // linear in corpus vectors.
-        "semantic_decon" -> (() => {
-          val evalSet = emb.filter(col("vec_id") < 20)
-          fullEval(SimilaritySearch.semanticDecontaminate(
-            emb.filter(col("vec_id") >= 20), "vec_id", evalSet,
-            "vec_id", "embedding"))
-        }),
-        // exact prefix-filter Jaccard join on a ZIPF-vocab synthetic
-        // corpus (the operator's regime — the word-salad docs table
-        // has a ~31-token vocab where EVERY token is hot, which is
-        // the documented adversarial case): docs ×K with per-doc
-        // token sets drawn Zipf-style from doc_id hashes. The row
-        // tracks the rare-token posting lists — near-linear.
-        "jaccard_prefix" -> (() => {
-          // every 10th doc clones its predecessor's token seed so
-          // the join has true pairs to find (rows > 0 at every K)
-          val zipf = docs.select(col("doc_id"),
-            concat_ws(" ", expr(
-              """transform(sequence(0, 14), j ->
-                |  concat('zt', cast(cast(
-                |    pow(4000.0,
-                |      (conv(substring(md5(concat('zp:',
-                |        doc_id - cast(doc_id % 10 = 1 as int),
-                |        ':', j)), 1, 8), 16, 10) % 1000) / 1000.0)
-                |    as long) as string)))""".stripMargin))
-              .as("ztext"))
-          fullEval(Dedup.jaccardPrefixJoin(zipf, "doc_id",
-            "ztext", tau = 0.6))
-        }),
-        // unigram Viterbi segmentation: corpus ×K collapses to the
-        // SAME distinct-word table (replica token aside), so the row
-        // must be nearly FLAT — growth here would mean the E-step
-        // scales with corpus volume instead of vocabulary.
-        "unigram_segment" -> (() => {
-          val w = graft.operators.Unigram.words(docs, "text")
-          fullEval(graft.operators.Unigram.segment(w,
-            graft.operators.Unigram.seedVocab(w)))
-        }),
-        // NN-descent over ×K vectors, one refine round: candidate
-        // volume is (2k)² per node — linear in nodes at fixed k; the
-        // row must track K linearly (superlinear = the
-        // neighbor-of-neighbor join stopped being degree-bounded).
-        "nn_descent_r1" -> (() =>
-          fullEval(graft.operators.NnDescent.knnGraph(
-            emb.select(col("vec_id"),
-              col("embedding").cast("array<float>").as("embedding")),
-            "vec_id", "embedding", k = 6, iters = 1))),
-        "simhash_exhaustive_tiled" -> (() =>
-          graft.queries.TextQueries.simhashPairsOver(docs).count()),
-        "simhash_banded" -> (() =>
-          Dedup.simhashNearDups(docs, "doc_id", "text",
-            bands = 6, maxHamming = 5).count()),
-        "cosine_exhaustive_tiled" -> (() =>
-          SimilaritySearch.cosinePairsAbove(emb, "vec_id", "embedding",
-            threshold = 0.999).count()),
-        "cosine_banded" -> (() =>
-          SimilaritySearch.cosineNearDupsBanded(emb, "vec_id",
-            "embedding", threshold = 0.999, bits = 256, bands = 16,
-            center = true).count()),
-        // r10 additions. code-structure parses (identifier subtokens
-        // + comment accounting over docs rendered as code): per-row
-        // regex chains + one per-doc window + keyed aggs —
-        // embarrassingly parallel, must scale linearly.
-        "code_structure" -> (() => {
-          val src = docs.select(col("doc_id"),
-            concat(lit("\"\"\"doc\"\"\"\n# c\ndef handleUserData_"),
-              (col("doc_id") % 7).cast("string"),
-              lit("(x):\n    return x  # t\n"), col("text"))
-              .as("text"))
-          val ids = graft.operators.Code.identifierSubtokens(
-            src, "doc_id", "text")
-            .groupBy("subtoken").count().count()
-          val cs = graft.operators.Code.commentStats(
-            src, "doc_id", "text").count()
-          ids + cs
-        }),
-        // vocab coverage: token stream scanned twice (count pass +
-        // probe pass), vocab table stays VOCABULARY-sized at every K
-        // (replica tokens reuse the base vocabulary), kept set
-        // broadcasts — linear in the token stream.
-        "vocab_coverage" -> (() =>
-          graft.operators.Corpus.vocabCoverage(docs, "doc_id",
-            "text", vocabSize = 1000).count()),
-        // margin mining EXACT form: the pair frame is |L|x|R|, so
-        // the row must scale ~K^2 — the documented reason the hot-
-        // corpus path feeds ANN k-NN lists instead of the cross
-        // score. K=1/2/4 prints the quadratic curve on purpose.
-        "margin_mining_exact" -> (() =>
-          SimilaritySearch.marginMining(
-            emb.filter(col("vec_id") % 2 === 0), "vec_id",
-            emb.filter(col("vec_id") % 2 === 1), "vec_id",
-            "embedding", k = 4, marginThreshold = 1.0).count()),
-        // r10 families: one data-sized join+agg per round (hyperball),
-        // per-x agg + bounded windows (skyline), K shrinking linear
-        // passes (coverage/kcenter), distinct-value windows (spearman)
-        "hyperball_4r" -> (() => {
-          val cap = lit(1000000L * k)
-          val e = (1 to 3).map(s => docs.select(
-              col("doc_id").cast("string").as("src"),
-              pmod(col("doc_id") * 31 + s, cap).cast("string").as("dst")))
-            .reduce(_ unionByName _)
-          fullEval(graft.operators.Graph.hyperBall(e, rounds = 4))
-        }),
-        "skyline_front" -> (() => {
-          val tk = split(col("text"), " ")
-          fullEval(graft.operators.Skyline.paretoFront(
-            docs.select(col("doc_id"),
-              size(tk).cast("long").as("x"),
-              (lit(1.0) - size(array_distinct(tk)).cast("double") /
-                size(tk).cast("double")).as("y")), "x", "y"))
-        }),
-        "coverage_greedy5" -> (() =>
-          fullEval(graft.operators.CoveragePlanner.greedySourceCoverage(
-            docs.withColumn("source",
-              concat(lit("s"), pmod(col("doc_id"), lit(20)))),
-            "text", "source", shingleN = 3, picks = 5))),
-        "kcenter_8" -> (() =>
-          fullEval(graft.operators.DiverseSelection.kCenterSelect(
-            emb, "vec_id", "embedding", k = 8))),
-        "spearman_ranks" -> (() => {
-          val tk = split(col("text"), " ")
-          fullEval(graft.operators.RankCorrelation.spearmanPairs(
-            docs.select(col("doc_id"), length(col("text")).as("a"),
-              size(tk).cast("long").as("b"),
-              size(array_distinct(tk)).cast("long").as("c")),
-            "doc_id", Seq("a", "b", "c")))
-        }),
-        "bradley_terry_8r" -> (() => {
-          val a = pmod(col("doc_id"), lit(8))
-          val b = pmod(col("doc_id") * 7 + 1, lit(8))
-          val cmp = docs.where(a =!= b).select(
-            when(col("doc_id") % 3 === 0, a).otherwise(b).as("winner"),
-            when(col("doc_id") % 3 === 0, b).otherwise(a).as("loser"))
-          fullEval(graft.operators.BradleyTerry.fit(
-            cmp, "winner", "loser", rounds = 8))
-        }))
-      val wanted = nameFilter.split(",").toSeq
-      for ((name, run) <- runs if wanted.exists(name.contains)) {
-        val (sec, rows) = time(run())
-        println(s"""{"bench":"$name","k":$k,"sec":$sec,"rows":$rows}""")
-      }
-      docs.unpersist(); emb.unpersist(); events.unpersist()
-    }
-    spark.stop()
   }
 }

@@ -40,11 +40,6 @@ object VectorFunctions {
   def cosine(a: Column, b: Column): Column =
     dotF64(a, b) / (l2Norm(a) * l2Norm(b))
 
-  /** L2-normalize a vector (reference `normalize_embeddings=True`). */
-  def l2Normalize(a: Column): Column =
-    transform(f64(a), x => x / sqrt(aggregate(
-      zip_with(f64(a), f64(a), (p, q) => p * q), lit(0.0), (s, x2) => s + x2)))
-
   /** Deterministic mock embedding for hermetic tests: component i is
     * `pmod(mmh3("text#i"), 1e6)/1e6 − 0.5` over the seed-0 murmur3
     * the id family already uses — a pseudo-vector in [-0.5, 0.5)

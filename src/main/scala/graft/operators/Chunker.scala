@@ -174,16 +174,6 @@ object Chunker {
 
   // ---- DataFrame wrappers -------------------------------------------
 
-  private case class PieceRow(text: String, page: Int, h1: String,
-      h2: String, chunk_index: Int, total_chunks: Int)
-
-  private val splitMarkdownUdf = udf { (md: String) =>
-    if (md == null) Array.empty[PieceRow]
-    else splitMarkdown(md).map(p =>
-      PieceRow(p.text, p.page, p.h1, p.h2, p.chunkIndex, p.totalChunks))
-      .toArray
-  }
-
   /** Explode a markdown column into chunk rows: the source column is
     * replaced by piece columns text/page/h1/h2/chunk_index/
     * total_chunks; all other columns carry through. Uses the custom
@@ -200,13 +190,6 @@ object Chunker {
       :+ gen.as(Seq("text", "page", "h1", "h2", "chunk_index",
         "total_chunks")): _*)
   }
-
-  /** The array-returning UDF formulation (kept for comparison and as
-    * the fallback shape). */
-  def chunkMarkdownUdf(df: DataFrame, mdCol: String): DataFrame =
-    df.withColumn("_piece", explode(splitMarkdownUdf(col(mdCol))))
-      .select(df.columns.filterNot(_ == mdCol).map(col).toSeq
-        :+ col("_piece.*"): _*)
 
   /** C8: passage-prefix enrichment + deterministic ids
     * (`producer_graph.py:92-113`): prepend "passage: [DOC_xxxx] ",

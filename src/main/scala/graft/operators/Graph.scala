@@ -726,8 +726,7 @@ object Graph {
     // two-column aggregate — identical semantics, never wrong, just
     // the unpacked width.
     val nodeType = pairs.schema("a").dataType
-    val integralNodes = Seq("int", "bigint", "smallint", "tinyint")
-      .contains(nodeType.simpleString)
+    val integralNodes = TopK.isIntegral(nodeType)
     // dtype gate FIRST: the range probe casts to long, which throws
     // under ANSI on non-numeric ids (string node names take the
     // two-column aggregate without ever running the probe)

@@ -306,24 +306,6 @@ object Multimodal {
       bands = bands, maxHamming = maxHamming)
   }
 
-  /** Feature extraction: fixed-dim ARRAY<FLOAT> per media row, ready
-    * for the similarity-search operators. */
-  def extractFeatures(media: DataFrame, decoder: Decoder,
-      dim: Int): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("media_id", StringType, nullable = false),
-      StructField("features", ArrayType(FloatType, containsNull = false))))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder
-      .encoderFor(schema)
-    media.select(col("media_id"), col("bytes"))
-      .mapPartitions { rows =>
-        rows.map { r =>
-          Row(r.getString(0),
-            decoder.features(r.getAs[Array[Byte]](1), dim).toSeq)
-        }
-      }(enc)
-  }
-
   /** Frame sampling: one output row per sampled frame (video → frame
     * explode, the S2/S5 page/segment-explode shape). */
   def sampleFrames(media: DataFrame, decoder: Decoder,
@@ -366,11 +348,4 @@ object Multimodal {
         }
       }(enc)
   }
-
-  /** Bucket media by id hash so heavy binary payloads spread evenly
-    * across executors / output files (100 TB posture: never partition
-    * multi-MB blobs by a skewed natural key). */
-  def bucketize(media: DataFrame, buckets: Int): DataFrame =
-    media.repartition(buckets,
-      pmod(xxhash64(col("media_id")), lit(buckets)))
 }

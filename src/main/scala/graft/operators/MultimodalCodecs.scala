@@ -1,9 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
-
 /** REAL multimodal codecs where the JDK has them (builder brief: the
   * container ships no native image/audio libraries, but `javax.imageio`
   * reads PNG/JPEG/BMP/GIF and RIFF/WAVE headers are plain bytes):
@@ -903,31 +899,6 @@ object MultimodalCodecs {
         }
         out
       }
-  }
-
-  private val AudioSchema = StructType(Seq(
-    StructField("media_id", StringType, nullable = false),
-    StructField("channels", IntegerType),
-    StructField("sample_rate", IntegerType),
-    StructField("bits", IntegerType),
-    StructField("duration_sec", DoubleType),
-    StructField("ok", BooleanType, nullable = false)))
-
-  /** Audio-metadata explode over a media frame (the decodeImages
-    * analog for WAV payloads). */
-  def decodeAudio(media: DataFrame): DataFrame = {
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder
-      .encoderFor(AudioSchema)
-    media.select(col("media_id"), col("bytes"))
-      .mapPartitions { rows =>
-        rows.map { r =>
-          WavAudio.info(r.getAs[Array[Byte]](1)) match {
-            case Some(w) => Row(r.getString(0), w.channels, w.sampleRate,
-              w.bitsPerSample, w.durationSec, true)
-            case None => Row(r.getString(0), null, null, null, null, false)
-          }
-        }
-      }(enc)
   }
 
   /** EXIF metadata (CIPA DC-008 / TIFF 6.0 IFD walk) from a JPEG's

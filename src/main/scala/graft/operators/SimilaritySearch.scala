@@ -1032,10 +1032,10 @@ object SimilaritySearch {
   }
 
   /** The q305 MULTI-MODAL candidate device in one place (used by
-    * the registered query, its recall spec, and ScaleBench — a
-    * tuning change here changes all three together): candidate
-    * (lid, rid) pairs between the EVEN- and ODD-id halves of `emb`,
-    * as the union of two independent ANN devices, each blind to the
+    * the registered query and its recall spec — a tuning change here
+    * changes both together): candidate (lid, rid) pairs between the
+    * EVEN- and ODD-id halves of `emb`, as the union of two
+    * independent ANN devices, each blind to the
     * other's misses:
     *   (a) the two directed IVF k-NN lists over a √n-cell
     *       [[sampleCentroids]] quantizer (listK, nProbe);

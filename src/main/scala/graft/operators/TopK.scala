@@ -42,13 +42,19 @@ object TopK {
     * be integral. String ids go through
     * [[SimilaritySearch.bruteForceTopKHeap]]. */
   private[operators] def requireIntegralId(df: DataFrame,
-      column: String): Unit =
-    df.schema(column).dataType match {
-      case ByteType | ShortType | IntegerType | LongType => ()
-      case t => throw new IllegalArgumentException(
-        s"id column '$column' must be integral (TINYINT, SMALLINT, " +
-          s"INT or BIGINT), got ${t.sql}")
-    }
+      column: String): Unit = {
+    val t = df.schema(column).dataType
+    if (!isIntegral(t)) throw new IllegalArgumentException(
+      s"id column '$column' must be integral (TINYINT, SMALLINT, " +
+        s"INT or BIGINT), got ${t.sql}")
+  }
+
+  /** The engine's one integral-type test: TINYINT, SMALLINT, INT or
+    * BIGINT. */
+  private[operators] def isIntegral(t: DataType): Boolean = t match {
+    case ByteType | ShortType | IntegerType | LongType => true
+    case _ => false
+  }
 
   /** The ANN operators' count-parameter check, at entry: each named
     * value must be ≥ 1; the failure names the caller's parameter. */

@@ -772,9 +772,8 @@ object GovernanceQueries {
     * bit-identically. */
   /** The q299 candidate construction (perturbed copy + the three
     * blocking passes + agreement projection) over any
-    * (c_custkey, c_name, c_acctbal) frame — ONE definition shared
-    * by the registered query and ScaleBench's scaling row, so the
-    * bench always measures the registered blocking shape. */
+    * (c_custkey, c_name, c_acctbal) frame — ONE definition, so any
+    * scaled run measures the registered blocking shape. */
   private[graft] def linkagePairs(cust: DataFrame): DataFrame = {
     val a = cust.select(col("c_custkey").as("ck_a"),
       col("c_name").as("name_a"), col("c_acctbal").as("bal_a"))

@@ -1387,8 +1387,7 @@ object TextQueries {
   /** The composed corpus build over an ARBITRARY documents frame
     * (doc_id, lang, source, text): q117's quality funnel + exact
     * keeper, then q120's near-dup removal over the survivors. q126
-    * registers this over the sf dir; ScaleBench sweeps the same
-    * composition at K× corpus replicas. */
+    * registers this over the sf dir. */
   def corpusBuild(docs: DataFrame): DataFrame = {
     val w = tokens(col("text"))
     val mwl =

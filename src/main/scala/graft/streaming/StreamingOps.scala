@@ -705,55 +705,6 @@ object StreamingOps {
         GroupStateTimeout.NoTimeout)(kmvUpdate(k))
   }
 
-  case class CmsEvent(row: Int, b: Long)
-
-  /** One CMS hash row's counters + emission version: `counts(b)` is
-    * the exact occurrence count hashed into bucket b — state is w
-    * longs per row-group FOREVER, d groups total. */
-  case class CmsRowState(counts: Map[Long, Long], ver: Long)
-
-  case class CmsRow(row: Int, ver: Long, counts: Map[Long, Long])
-
-  private def cmsUpdate(row: Int, events: Iterator[CmsEvent],
-      state: GroupState[CmsRowState]): Iterator[CmsRow] = {
-    val prev = state.getOption.getOrElse(CmsRowState(Map.empty, 0L))
-    val m = scala.collection.mutable.Map[Long, Long]() ++ prev.counts
-    events.foreach(e => m(e.b) = m.getOrElse(e.b, 0L) + 1L)
-    val next = CmsRowState(m.toMap, prev.ver + 1)
-    state.update(next)
-    Iterator.single(CmsRow(row, next.ver, next.counts))
-  }
-
-  /** CONTINUOUS count-min counters — the streaming form of
-    * [[graft.operators.Sketches.cmsEstimates]]'s build stage: every
-    * term explodes to its d (row, bucket) cells (the same md5-prefix
-    * bucket hash as the batch operator), cells group by ROW (d
-    * groups), and each group folds its w counters in
-    * `flatMapGroupsWithState`. The latest version per row is
-    * bucket-for-bucket identical to the batch counter table on the
-    * same prefix; point estimates are min-over-rows of the probe's
-    * buckets, exactly as in batch. Update output mode.
-    *
-    * Expects a (`termCol`) column; d × w as in the batch operator. */
-  def streamingCmsCounters(terms: org.apache.spark.sql.DataFrame,
-      termCol: String, d: Int = 4, w: Int = 256): Dataset[CmsRow] = {
-    require(d >= 1 && w >= 2, s"cms needs d >= 1, w >= 2 ($d, $w)")
-    val spark = terms.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    terms
-      .select(col(termCol).cast("string").as("t"),
-        explode(sequence(lit(0), lit(d - 1))).as("row"))
-      .select(col("row"),
-        (conv(substring(md5(concat(col("row").cast("string"),
-          lit(":"), col("t"))), 1, 8), 16, 10).cast("long") % w)
-          .as("b"))
-      .as[CmsEvent]
-      .groupByKey(_.row)
-      .flatMapGroupsWithState(OutputMode.Update,
-        GroupStateTimeout.NoTimeout)(cmsUpdate)
-  }
-
   case class MomentEvent(group: String, v: Double)
 
   /** Per-group exact moment state: count + DECIMAL(18,6)-exact sums

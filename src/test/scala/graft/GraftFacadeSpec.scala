@@ -29,10 +29,12 @@ class GraftFacadeSpec extends SparkTestBase {
   }
 
   test("index write/read with count verification") {
-    val dir = java.nio.file.Files.createTempDirectory("gidx").toString
-    val index = Graft.withMockEmbeddings(Graft.ingestMarkdown(docs), 8)
-    Graft.writeIndex(index, dir)
-    assert(operators.Index.count(spark, dir) === index.count())
+    withTempDir("gidx") { d =>
+      val dir = d.toString
+      val index = Graft.withMockEmbeddings(Graft.ingestMarkdown(docs), 8)
+      Graft.writeIndex(index, dir)
+      assert(operators.Index.count(spark, dir) === index.count())
+    }
   }
 
   test("textFeatures appends the analysis columns") {

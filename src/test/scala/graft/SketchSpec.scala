@@ -35,16 +35,18 @@ class SketchSpec extends SparkTestBase {
       ("c1", "DOC_AAAA0001", "one"), ("c2", "DOC_BBBB0002", "two"),
       ("c3", "DOC_CCCC0003", "three"))
       .toDF("chunk_id", "document_id", "chunk")
-    val dir = java.nio.file.Files.createTempDirectory("arch").toString
-    graft.operators.Ingest.writeArchive(chunks, dir, buckets = 8)
-    val read = spark.read.parquet(dir)
-      .filter(col("doc_bucket") === 3)
-    val plan = read.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") &&
-      plan.contains("doc_bucket"),
-      s"expected partition pruning in:\n$plan")
-    // and the data round-trips
-    assert(spark.read.parquet(dir).count() === 3)
+    withTempDir("arch") { d =>
+      val dir = d.toString
+      graft.operators.Ingest.writeArchive(chunks, dir, buckets = 8)
+      val read = spark.read.parquet(dir)
+        .filter(col("doc_bucket") === 3)
+      val plan = read.queryExecution.executedPlan.toString
+      assert(plan.contains("PartitionFilters") &&
+        plan.contains("doc_bucket"),
+        s"expected partition pruning in:\n$plan")
+      // and the data round-trips
+      assert(spark.read.parquet(dir).count() === 3)
+    }
   }
 
   test("count-min sketch: estimates are one-sided (≥ true count) " +

@@ -153,7 +153,7 @@ class ChunkerSpec extends SparkTestBase {
       .toDF("source_file", "text")
     val gen = Chunker.chunkMarkdown(df, "text")
       .collect().map(_.toSeq).toSet
-    val viaUdf = Chunker.chunkMarkdownUdf(df, "text")
+    val viaUdf = ChunkerSpec.chunkMarkdownUdf(df, "text")
       .collect().map(_.toSeq).toSet
     assert(gen === viaUdf)
   }
@@ -168,4 +168,26 @@ class ChunkerSpec extends SparkTestBase {
     assert(row.getAs[String]("hash").matches("[0-9a-f]{32}"))
     assert(row.getAs[String]("chunk_id").startsWith("DOC_9BBFD75F_"))
   }
+}
+
+object ChunkerSpec {
+  import org.apache.spark.sql.DataFrame
+  import org.apache.spark.sql.functions._
+
+  case class PieceRow(text: String, page: Int, h1: String,
+      h2: String, chunk_index: Int, total_chunks: Int)
+
+  private val splitMarkdownUdf = udf { (md: String) =>
+    if (md == null) Array.empty[PieceRow]
+    else Chunker.splitMarkdown(md).map(p =>
+      PieceRow(p.text, p.page, p.h1, p.h2, p.chunkIndex, p.totalChunks))
+      .toArray
+  }
+
+  /** Reference formulation for [[Chunker.chunkMarkdown]]: the same
+    * pure splitter behind an array-returning UDF + explode. */
+  def chunkMarkdownUdf(df: DataFrame, mdCol: String): DataFrame =
+    df.withColumn("_piece", explode(splitMarkdownUdf(col(mdCol))))
+      .select(df.columns.filterNot(_ == mdCol).map(col).toSeq
+        :+ col("_piece.*"): _*)
 }

@@ -7,7 +7,6 @@ import scala.jdk.CollectionConverters._
 
 import graft.{Graft, SparkTestBase}
 import graft.io.PosixLocalFileSystem
-import org.apache.commons.io.FileUtils
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.functions._
@@ -67,9 +66,11 @@ class IndexSpec extends SparkTestBase {
   }
 
   test("write + count round-trip through bucketed parquet (S7/V8)") {
-    val dir = java.nio.file.Files.createTempDirectory("idx").toString
-    Index.write(Index.buildPoints(chunks), dir, buckets = 4)
-    assert(Index.count(spark, dir) === 3)
+    withTempDir("idx") { d =>
+      val dir = d.toString
+      Index.write(Index.buildPoints(chunks), dir, buckets = 4)
+      assert(Index.count(spark, dir) === 3)
+    }
   }
 
   /** The command lines of the processes the JVM starts while `body`
@@ -111,9 +112,8 @@ class IndexSpec extends SparkTestBase {
       .toDF("chunk_id", "source_file", "type", "engine", "hash",
         "chunk_index", "page", "chunk", "embedding")
       .repartition(4)
-    val tmp = Files.createTempDirectory("idx")
-    val dir = tmp.resolve("index")
-    try {
+    withTempDir("idx") { tmp =>
+      val dir = tmp.resolve("index")
       // processes started on the index's files (Spark's heartbeater
       // forks `getconf PAGESIZE` once per JVM, at a time of its own)
       val starts = processStarts(Graft.writeIndex(many, dir.toString))
@@ -147,7 +147,7 @@ class IndexSpec extends SparkTestBase {
       val got = back.select(want.columns.map(col).toSeq: _*)
       assert(got.count() === 400)
       assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
-    } finally FileUtils.deleteDirectory(tmp.toFile)
+    }
   }
 
   test("PosixLocalFileSystem is the session's file: filesystem; a " +

@@ -137,16 +137,18 @@ class IngestSpec extends SparkTestBase {
 
   test("discover anti-joins tracked files (S1/J5)") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("staging").toFile
-    java.nio.file.Files.writeString(
-      new java.io.File(tmp, "new.md").toPath, "# new doc")
-    java.nio.file.Files.writeString(
-      new java.io.File(tmp, "done.md").toPath, "# old doc")
-    val lifecycle = Seq(
-      ("done.md", "CONSUMING"), ("gone.md", "INGEST_SUCCESS"))
-      .toDF("source_file", "status")
-    val got = Ingest.discover(spark, tmp.getAbsolutePath, lifecycle)
-      .select("source_file").as[String].collect()
-    assert(got.toSeq === Seq("new.md"))
+    withTempDir("staging") { d =>
+      val tmp = d.toFile
+      java.nio.file.Files.writeString(
+        new java.io.File(tmp, "new.md").toPath, "# new doc")
+      java.nio.file.Files.writeString(
+        new java.io.File(tmp, "done.md").toPath, "# old doc")
+      val lifecycle = Seq(
+        ("done.md", "CONSUMING"), ("gone.md", "INGEST_SUCCESS"))
+        .toDF("source_file", "status")
+      val got = Ingest.discover(spark, tmp.getAbsolutePath, lifecycle)
+        .select("source_file").as[String].collect()
+      assert(got.toSeq === Seq("new.md"))
+    }
   }
 }

@@ -74,17 +74,19 @@ class ModelArtifactsSpec extends SparkTestBase {
 
   test("contentFingerprint is metadata-only and moves when a file's " +
       "bytes (length) or set membership change") {
-    val dir = Files.createTempDirectory("graft_fp").toString
-    val f = Paths.get(dir, "part.parquet")
-    Files.writeString(f, "aaaa")
-    val fp1 = ModelArtifacts.contentFingerprint(spark, dir,
-      Seq("part.parquet"))
-    val fp1b = ModelArtifacts.contentFingerprint(spark, dir,
-      Seq("part.parquet"))
-    assert(fp1 === fp1b, "stable under re-listing")
-    Files.writeString(f, "aaaabbbb") // longer -> new length
-    val fp2 = ModelArtifacts.contentFingerprint(spark, dir,
-      Seq("part.parquet"))
-    assert(fp1 !== fp2, "length change must change the fingerprint")
+    withTempDir("graft_fp") { d =>
+      val dir = d.toString
+      val f = Paths.get(dir, "part.parquet")
+      Files.writeString(f, "aaaa")
+      val fp1 = ModelArtifacts.contentFingerprint(spark, dir,
+        Seq("part.parquet"))
+      val fp1b = ModelArtifacts.contentFingerprint(spark, dir,
+        Seq("part.parquet"))
+      assert(fp1 === fp1b, "stable under re-listing")
+      Files.writeString(f, "aaaabbbb") // longer -> new length
+      val fp2 = ModelArtifacts.contentFingerprint(spark, dir,
+        Seq("part.parquet"))
+      assert(fp1 !== fp2, "length change must change the fingerprint")
+    }
   }
 }

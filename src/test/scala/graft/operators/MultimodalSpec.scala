@@ -4,8 +4,8 @@ import graft.SparkTestBase
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
-/** Multimodal plumbing: schema, partition-batched decode, feature
-  * extraction into the similarity operators, frame explode. The codec
+/** Multimodal plumbing: schema, partition-batched decode, frame
+  * explode. The codec
   * itself is the deterministic [[Multimodal.StubDecoder]]. */
 class MultimodalSpec extends SparkTestBase {
 
@@ -33,14 +33,6 @@ class MultimodalSpec extends SparkTestBase {
     val b = Multimodal.decodeImages(media, Multimodal.StubDecoder)
       .collect().map(_.toSeq).toSet
     assert(a === b)
-  }
-
-  test("extractFeatures feeds similarity search end-to-end") {
-    val feats = Multimodal.extractFeatures(media, Multimodal.StubDecoder, 8)
-    assert(feats.head().getSeq[Float](1).length === 8)
-    val knn = SimilaritySearch.bruteForceTopK(
-      feats.limit(1), "media_id", feats, "media_id", "features", k = 2)
-    assert(knn.count() === 2)
   }
 
   test("sampleFrames explodes videos only, n rows each") {
@@ -112,12 +104,6 @@ class MultimodalSpec extends SparkTestBase {
       .map(r => Set(r.getString(0), r.getString(1)) -> r.getInt(2))
     assert(pairs.toMap === Map(Set("clipA#1", "clipB#1") -> 0),
       s"expected exactly the planted pair, got ${pairs.toSeq}")
-  }
-
-  test("bucketize spreads rows across requested partitions") {
-    val out = Multimodal.bucketize(media, 3)
-    assert(out.rdd.getNumPartitions === 3)
-    assert(out.count() === 4)
   }
 
   // ---- minimal ISO BMFF (MP4) fixture: 5 samples of 7 bytes,

@@ -77,14 +77,6 @@ class SimilaritySpec extends SparkTestBase {
     assert(math.abs(r.getDouble(1) - 5.0) <= 1e-12)
   }
 
-  test("l2Normalize yields unit vectors") {
-    import spark.implicits._
-    val n = Seq(Tuple1(Array(3.0f, 4.0f))).toDF("v")
-      .select(VectorFunctions.l2Norm(
-        VectorFunctions.l2Normalize(col("v")))).head().getDouble(0)
-    assert(math.abs(n - 1.0) <= 1e-12)
-  }
-
   test("banded hyperplane-LSH near-dup mining equals the exhaustive " +
       "scan on planted twins") {
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")

@@ -1,12 +1,12 @@
 package graft.operators
 
-import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkTestBase
 import Tokenizers._
 
 /** Subword tokenizers: WordPiece greedy matching, byte-level BPE
   * merge order, file loading, and the chunker invariants under every
   * Tokenizer implementation (SURVEY §7 hard part 2). */
-class TokenizersSpec extends AnyFunSuite {
+class TokenizersSpec extends SparkTestBase {
 
   private val wp = new WordPieceTokenizer(Set(
     "the", "quick", "brown", "fox", "jump", "##ed", "##s", "over",
@@ -46,16 +46,17 @@ class TokenizersSpec extends AnyFunSuite {
   }
 
   test("tokenizers load from HF file formats") {
-    val dir = java.nio.file.Files.createTempDirectory("tok")
-    val vocab = dir.resolve("vocab.txt")
-    java.nio.file.Files.writeString(vocab, "the\nfox\n##es\n")
-    val w = WordPieceTokenizer.fromVocabFile(vocab.toString)
-    assert(w.tokenize("the foxes").toSeq === Seq("the", "fox", "##es"))
-    val merges = dir.resolve("merges.txt")
-    java.nio.file.Files.writeString(merges,
-      "#version: 0.2\nh e\nl l\nhe ll\nhell o\n")
-    val b = ByteLevelBpeTokenizer.fromMergesFile(merges.toString)
-    assert(b.tokenize("hello").toSeq === Seq("hello"))
+    withTempDir("tok") { dir =>
+      val vocab = dir.resolve("vocab.txt")
+      java.nio.file.Files.writeString(vocab, "the\nfox\n##es\n")
+      val w = WordPieceTokenizer.fromVocabFile(vocab.toString)
+      assert(w.tokenize("the foxes").toSeq === Seq("the", "fox", "##es"))
+      val merges = dir.resolve("merges.txt")
+      java.nio.file.Files.writeString(merges,
+        "#version: 0.2\nh e\nl l\nhe ll\nhell o\n")
+      val b = ByteLevelBpeTokenizer.fromMergesFile(merges.toString)
+      assert(b.tokenize("hello").toSeq === Seq("hello"))
+    }
   }
 
   test("committed HF-format fixtures reproduce the published " +

@@ -30,65 +30,67 @@ class StreamingIngestSpec extends SparkTestBase {
 
   test("streamed index equals the batch ingest output on the same " +
       "fixture (consumer_worker.py:63-97 semantics)") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream")
-    val staging = tmp.resolve("staging")
-    java.nio.file.Files.createDirectory(staging)
-    writeFixtures(staging)
-    val indexDir = tmp.resolve("index").toString
-    val ckpt = tmp.resolve("ckpt").toString
+    withTempDir("graft_stream") { tmp =>
+      val staging = tmp.resolve("staging")
+      java.nio.file.Files.createDirectory(staging)
+      writeFixtures(staging)
+      val indexDir = tmp.resolve("index").toString
+      val ckpt = tmp.resolve("ckpt").toString
 
-    val q = StreamingIngest.start(spark, staging.toString, indexDir,
-      ckpt, withTimeout = false)
-    q.awaitTermination(120000)
+      val q = StreamingIngest.start(spark, staging.toString, indexDir,
+        ckpt, withTimeout = false)
+      q.awaitTermination(120000)
 
-    val svc = new Embed.HashEmbeddingService(32)
-    val batchDocs = spark.read.format("text")
-      .option("wholetext", "true").load(staging.toString)
-      .select(col("_metadata.file_name").as("source_file"),
-        col("value").as("text"))
-    val expected = Embed.embedText(
-      Ingest.ingestMarkdown(batchDocs), "chunk", "embedding", svc,
-      prefix = "")
-    val got = spark.read.parquet(indexDir)
-      .drop("doc_bucket", "ingested_at")
+      val svc = new Embed.HashEmbeddingService(32)
+      val batchDocs = spark.read.format("text")
+        .option("wholetext", "true").load(staging.toString)
+        .select(col("_metadata.file_name").as("source_file"),
+          col("value").as("text"))
+      val expected = Embed.embedText(
+        Ingest.ingestMarkdown(batchDocs), "chunk", "embedding", svc,
+        prefix = "")
+      val got = spark.read.parquet(indexDir)
+        .drop("doc_bucket", "ingested_at")
 
-    assert(got.count() === expected.count())
-    assert(got.count() > 3) // b.md sub-splits into several chunks
-    def rowSet(df: org.apache.spark.sql.DataFrame): Set[String] = {
-      val cols = df.columns.sorted.map(col).toSeq
-      df.select(to_json(struct(cols: _*))).collect()
-        .map(_.getString(0)).toSet
+      assert(got.count() === expected.count())
+      assert(got.count() > 3) // b.md sub-splits into several chunks
+      def rowSet(df: org.apache.spark.sql.DataFrame): Set[String] = {
+        val cols = df.columns.sorted.map(col).toSeq
+        df.select(to_json(struct(cols: _*))).collect()
+          .map(_.getString(0)).toSet
+      }
+      assert(rowSet(got) === rowSet(expected))
     }
-    assert(rowSet(got) === rowSet(expected))
   }
 
   test("fileCompleteness: the lifecycle reporting view over the " +
       "streaming sink shows every file complete, duplicate-free, " +
       "and landed in one visibility window (r6)") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_fc")
-    val staging = tmp.resolve("staging")
-    java.nio.file.Files.createDirectory(staging)
-    writeFixtures(staging)
-    val indexDir = tmp.resolve("index").toString
-    val ckpt = tmp.resolve("ckpt").toString
-    val q = StreamingIngest.start(spark, staging.toString, indexDir,
-      ckpt, withTimeout = false)
-    q.awaitTermination(120000)
-    val report = StreamingIngest
-      .fileCompleteness(spark.read.parquet(indexDir))
-      .collect().map(r => r.getString(0) -> r).toMap
-    assert(report.keySet === Set("a.md", "b.md", "c.md"))
-    report.values.foreach { r =>
-      assert(r.getBoolean(3), s"incomplete: $r") // complete
-      assert(r.getLong(4) === 0L, s"dup chunks: $r") // n_dup_chunks
-      assert(r.getLong(1) === r.getLong(2)) // n_chunks == expected
-      // barrier atomicity: a file's chunks are stamped within one
-      // visibility commit — the window must be (near-)zero, far
-      // below any cross-batch gap
-      assert(!r.isNullAt(7) && r.getDouble(7) <= 5.0,
-        s"ingest window too wide: $r")
+    withTempDir("graft_stream_fc") { tmp =>
+      val staging = tmp.resolve("staging")
+      java.nio.file.Files.createDirectory(staging)
+      writeFixtures(staging)
+      val indexDir = tmp.resolve("index").toString
+      val ckpt = tmp.resolve("ckpt").toString
+      val q = StreamingIngest.start(spark, staging.toString, indexDir,
+        ckpt, withTimeout = false)
+      q.awaitTermination(120000)
+      val report = StreamingIngest
+        .fileCompleteness(spark.read.parquet(indexDir))
+        .collect().map(r => r.getString(0) -> r).toMap
+      assert(report.keySet === Set("a.md", "b.md", "c.md"))
+      report.values.foreach { r =>
+        assert(r.getBoolean(3), s"incomplete: $r") // complete
+        assert(r.getLong(4) === 0L, s"dup chunks: $r") // n_dup_chunks
+        assert(r.getLong(1) === r.getLong(2)) // n_chunks == expected
+        // barrier atomicity: a file's chunks are stamped within one
+        // visibility commit — the window must be (near-)zero, far
+        // below any cross-batch gap
+        assert(!r.isNullAt(7) && r.getDouble(7) <= 5.0,
+          s"ingest window too wide: $r")
+      }
+      assert(report("b.md").getLong(1) > 1) // b.md really sub-split
     }
-    assert(report("b.md").getLong(1) > 1) // b.md really sub-split
   }
 
   test("chunkRowBarrier holds partial files and emits complete ones " +

@@ -105,36 +105,37 @@ class StreamingOpsSpec extends SparkTestBase {
   test("readStream windowed aggregation matches the batch result") {
     import org.apache.spark.sql.functions._
     // stage events.parquet alone in a dir (file source streams a dir)
-    val dir = java.nio.file.Files.createTempDirectory("evstream")
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$sf/events.parquet"),
-      dir.resolve("events.parquet"))
-    val raw = spark.read.parquet(dir.toString)
-    // legacy testdata carried ts as nanos-as-long; current testdata
-    // is already timestamp[us] — mirror Tables.events' handling
-    val toTs = (df: org.apache.spark.sql.DataFrame) =>
-      df.schema("ts").dataType match {
-        case org.apache.spark.sql.types.LongType =>
-          df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-        case _ => df
-      }
-    val agg = (df: org.apache.spark.sql.DataFrame) =>
-      toTs(df)
-        .withWatermark("ts", "10 minutes")
-        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-        .select(col("window.start").as("ws"), col("event_type"), col("n"))
-    val q = agg(spark.readStream.schema(raw.schema).parquet(dir.toString))
-      .writeStream.format("memory").queryName("win_out")
-      .outputMode("complete").start()
-    q.processAllAvailable()
-    val streamed = spark.table("win_out").collect()
-      .map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2))).toSet
-    q.stop()
-    val batch = agg(raw).collect()
-      .map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2))).toSet
-    assert(streamed === batch)
-    assert(streamed.nonEmpty)
+    withTempDir("evstream") { dir =>
+      java.nio.file.Files.copy(
+        java.nio.file.Paths.get(s"$sf/events.parquet"),
+        dir.resolve("events.parquet"))
+      val raw = spark.read.parquet(dir.toString)
+      // legacy testdata carried ts as nanos-as-long; current testdata
+      // is already timestamp[us] — mirror Tables.events' handling
+      val toTs = (df: org.apache.spark.sql.DataFrame) =>
+        df.schema("ts").dataType match {
+          case org.apache.spark.sql.types.LongType =>
+            df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
+          case _ => df
+        }
+      val agg = (df: org.apache.spark.sql.DataFrame) =>
+        toTs(df)
+          .withWatermark("ts", "10 minutes")
+          .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+          .agg(count(lit(1)).as("n"))
+          .select(col("window.start").as("ws"), col("event_type"), col("n"))
+      val q = agg(spark.readStream.schema(raw.schema).parquet(dir.toString))
+        .writeStream.format("memory").queryName("win_out")
+        .outputMode("complete").start()
+      q.processAllAvailable()
+      val streamed = spark.table("win_out").collect()
+        .map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2))).toSet
+      q.stop()
+      val batch = agg(raw).collect()
+        .map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2))).toSet
+      assert(streamed === batch)
+      assert(streamed.nonEmpty)
+    }
   }
 
   /** Minimal GroupState stub for direct state-function tests. */
