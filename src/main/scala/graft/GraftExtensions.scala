@@ -63,6 +63,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(_ => CheapPredicatesFirst)
     ext.injectOptimizerRule(_ => graft.plans.BucketedRangeJoin)
     ext.injectPlannerStrategy(_ => graft.plans.GraftAsOfStrategy)
+    ext.injectPlannerStrategy(_ => graft.plans.CosineTopKStrategy)
   }
 }
 

@@ -157,21 +157,15 @@ object TextFunctions {
 
   /** Word n-gram shingles, `concat_ws(" ")` of n consecutive tokens —
     * the unit of MinHash / Jaccard near-dup detection. Empty array if
-    * the document has fewer than n tokens. */
-  def wordShingles(text: Column, n: Int): Column = {
-    val t = tokens(text)
-    when(size(t) >= n,
-      transform(sequence(lit(0), size(t) - n),
-        i => concat_ws(" ", (1 to n).map(j => element_at(t, i + j)): _*)))
-      .otherwise(array().cast("array<string>"))
-  }
+    * the document has fewer than n tokens. A single-pass UDF: the
+    * tokenization runs exactly once per row, where the column-
+    * expression form (TextFunctionsSpec keeps it as the reference)
+    * re-evaluates the `split` subtree on every lambda reference under
+    * interpreted higher-order functions — measured 5× slower on the
+    * dedup paths at sf0.1. */
+  def wordShinglesFast(text: Column, n: Int): Column =
+    wordShinglesUdfImpl(text, lit(n))
 
-  /** Single-pass shingle UDF: identical output to [[wordShingles]],
-    * but the tokenization runs exactly once per row. The column-
-    * expression form re-evaluates the `split` subtree on every lambda
-    * reference under interpreted higher-order functions — measured 5×
-    * slower on the dedup paths at sf0.1. Hot paths use this; the
-    * expression form remains for pure-column contexts. */
   private val wordShinglesUdfImpl =
     udf { (s: String, n: Int) =>
       if (s == null) Array.empty[String]
@@ -182,9 +176,6 @@ object TextFunctions {
           t.slice(i, i + n).mkString(" "))
       }
     }
-
-  def wordShinglesFast(text: Column, n: Int): Column =
-    wordShinglesUdfImpl(text, lit(n))
 
   /** Character n-gram language-ID heuristic: scores a text against
     * per-language marker n-gram lists and returns the argmax language

@@ -44,8 +44,6 @@ object Multimodal {
   trait Decoder extends Serializable {
     /** (width, height, channels) or None for undecodable bytes. */
     def imageDims(bytes: Array[Byte]): Option[(Int, Int, Int)]
-    /** Fixed-length feature vector for the media content. */
-    def features(bytes: Array[Byte], dim: Int): Array[Float]
     /** Sample `n` frame descriptors from a video payload. */
     def sampleFrames(bytes: Array[Byte], n: Int): Seq[Array[Byte]]
     /** Re-encode the image scaled to w×h; None for undecodable
@@ -98,8 +96,8 @@ object Multimodal {
     }
   }
 
-  /** Deterministic stand-in for the codec stack: dimensions and
-    * features derive from a rolling hash of the bytes; empty payloads
+  /** Deterministic stand-in for the codec stack: dimensions derive
+    * from a rolling hash of the bytes; empty payloads
     * are undecodable. Every value is a pure function of content, so
     * re-runs are idempotent. */
   object StubDecoder extends Decoder {
@@ -119,15 +117,6 @@ object Multimodal {
         Some((64 + (math.abs(h) % 1920).toInt,
           64 + (math.abs(h >> 11) % 1080).toInt, 3))
       }
-    def features(bytes: Array[Byte], dim: Int): Array[Float] = {
-      val out = new Array[Float](dim)
-      var i = 0
-      while (i < dim) {
-        out(i) = ((mix(bytes, i + 1L) % 1000000L) / 1000000.0f)
-        i += 1
-      }
-      out
-    }
     def sampleFrames(bytes: Array[Byte], n: Int): Seq[Array[Byte]] =
       (0 until n).map(i => Array[Byte](bytes((i * 7) % bytes.length),
         bytes((i * 13) % bytes.length)))

@@ -4,8 +4,7 @@ package graft.operators
   * container ships no native image/audio libraries, but `javax.imageio`
   * reads PNG/JPEG/BMP/GIF and RIFF/WAVE headers are plain bytes):
   *
-  *  - [[JdkImageDecoder]]: ImageIO-backed dimensions + a deterministic
-  *    luminance-histogram feature vector.
+  *  - [[JdkImageDecoder]]: ImageIO-backed dimensions and resizing.
   *  - [[WavAudio]]: RIFF/WAVE header parse (channels, rate, bits,
   *    duration) + per-bucket RMS energy features over 16-bit PCM.
   *
@@ -62,35 +61,6 @@ object MultimodalCodecs {
       decodeBounded(bytes).map(img =>
         (img.getWidth, img.getHeight,
           img.getColorModel.getNumComponents))
-
-    /** dim-bin luminance histogram, normalized by pixel count —
-      * a classic cheap content descriptor, deterministic per bytes. */
-    def features(bytes: Array[Byte], dim: Int): Array[Float] = {
-      try {
-        val img = decodeBounded(bytes).orNull
-        if (img == null)
-          return Multimodal.StubDecoder.features(bytes, dim)
-        val hist = new Array[Float](dim)
-        val w = img.getWidth
-        val h = img.getHeight
-        var y = 0
-        while (y < h) {
-          var x = 0
-          while (x < w) {
-            val rgb = img.getRGB(x, y)
-            val luma = (((rgb >> 16) & 0xff) * 299 +
-              ((rgb >> 8) & 0xff) * 587 + (rgb & 0xff) * 114) / 1000
-            hist(math.min(dim - 1, luma * dim / 256)) += 1f
-            x += 1
-          }
-          y += 1
-        }
-        val n = (w * h).toFloat
-        hist.map(_ / n)
-      } catch {
-        case _: Exception => Multimodal.StubDecoder.features(bytes, dim)
-      }
-    }
 
     /** MJPEG-in-AVI sampled for real ([[AviVideo]]); MP4/MOV
       * keyframes located and extracted for real from the sample

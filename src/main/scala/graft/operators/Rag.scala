@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.functions.VectorFunctions
+import graft.functions.VectorFunctions.{dotF64, l2Norm}
 
 /** RAG query-side operators (SURVEY §2.12 / §3.1): batch retrieval →
   * context assembly → citation rewrite. The LLM generation leg stays
@@ -23,29 +23,25 @@ object Rag {
       .drop("_best")
   }
 
-  /** R1: context assembly — extract the `[DOC_hex]` anchor, strip the
-    * `passage: ` prefix, number hits `[sourceN]` in rank order, join
-    * with `---` separators (`chroma_chat.py:27-44`). One row per qid:
-    * (qid, context, sources ARRAY<STRING>). */
+  /** R1: context assembly over ranked hits (qid, chunk, source_file,
+    * rnk) — one row per qid: (qid, context, sources ARRAY<STRING>).
+    * Per query, in rank order: exact-duplicate chunk text is dropped
+    * keeping the best rank (D1), the `passage: [DOC_hex] ` prefix is
+    * stripped, hits are numbered `[sourceN]` and joined with `---`
+    * separators (`chroma_chat.py:22-44`). One aggregation on qid, no
+    * window: behind [[retrieve]]'s top-k, which is partitioned on qid
+    * already, it plans no exchange of its own. */
   def assembleContext(hits: DataFrame): DataFrame = {
-    val anchored = hits
-      .withColumn("doc_anchor",
-        regexp_extract(col("chunk"), "\\[(DOC_[0-9A-F]{8})\\]", 1))
-      .withColumn("body",
-        regexp_replace(col("chunk"),
-          "^passage: \\[DOC_[0-9A-F]{8}\\] ", ""))
-    val w = Window.partitionBy(col("qid")).orderBy(col("rnk"))
-    anchored
-      .withColumn("n", row_number().over(w))
-      .withColumn("numbered",
-        concat(lit("[source"), col("n"), lit("] "), col("body")))
-      .groupBy(col("qid"))
-      .agg(
-        concat_ws("\n---\n", array_sort(collect_list(
-          struct(col("n"), col("numbered")))).getField("numbered"))
-          .as("context"),
-        array_sort(collect_list(struct(col("n"), col("source_file"))))
-          .getField("source_file").as("sources"))
+    val ranked = hits.groupBy(col("qid")).agg(array_sort(collect_list(
+      struct(col("rnk"), col("chunk"), col("source_file")))).as("_hits"))
+    // each passage at its first (best-ranked) occurrence
+    val kept = filter(col("_hits"), (x, i) => !exists(
+      slice(col("_hits"), lit(1), i), y => y("chunk") <=> x("chunk")))
+    ranked.select(col("qid"), kept.as("_kept")).select(col("qid"),
+      concat_ws("\n---\n", transform(col("_kept"), (x, i) =>
+        concat(lit("[source"), i + 1, lit("] "), regexp_replace(x("chunk"),
+          "^passage: \\[DOC_[0-9A-F]{8}\\] ", "")))).as("context"),
+      transform(col("_kept"), x => x("source_file")).as("sources"))
   }
 
   /** R3: citation post-map — rewrite `[sourceN]` / `(sourceN)` tags
@@ -117,65 +113,69 @@ object Rag {
     generate(queries.withColumn("context", col(questionCol)), generator)
       .drop("context")
 
-  /** Full batch RAG slice: queries (qid, qvec) against an embedded
-    * chunk index (chunk_id, chunk, source_file, embedding) → top-k →
-    * dedup → context (→ generation happens outside, via Generator).
-    * Retrieval runs the bounded-heap formulation — k rows per
-    * (partition, query) in the shuffle, never the full scored
-    * product. */
-  def retrieve(index: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    val hits = SimilaritySearch.bruteForceTopKHeap(
-      queries, "qid", index, "chunk_id", "embedding", k)
+  /** Full batch RAG slice: queries (qid, embedding) against an
+    * embedded chunk index (chunk_id, chunk, source_file, embedding) →
+    * top-k chunk ROWS → [[assembleContext]] (→ generation happens
+    * outside, via Generator). The top-k ranks index rows by (score
+    * desc, chunk_id, source_file, chunk) and carries each hit's
+    * passage and file through the ranking, so a chunk id that two
+    * files share is two candidate rows, never a join fan-out. */
+  def retrieve(index: DataFrame, queries: DataFrame, k: Int): DataFrame =
+    assembleContext(hits(index, queries, k))
+
+  /** The top-k chunk rows of each query, passage and file carried:
+    * (qid, chunk_id, source_file, chunk, score, rnk). */
+  private def hits(index: DataFrame, queries: DataFrame,
+      k: Int): DataFrame =
+    SimilaritySearch.bruteForceTopKRows(queries, "qid", index,
+        "chunk_id", "embedding", Seq("source_file", "chunk"), k)
       .withColumnRenamed("cid", "chunk_id")
-    val joined = hits.join(
-      index.select(col("chunk_id"), col("chunk"), col("source_file")),
-      Seq("chunk_id"))
-    assembleContext(dedupHits(joined))
-  }
 
   /** Retrieve → RERANK → assemble: the production two-stage serving
     * cascade — a wide dense recall stage (`kCandidates` per query)
     * feeding the cross-encoder precision stage
-    * ([[Rerank.rerankTopK]]), with [[retrieve]]'s exact dedup +
-    * context-assembly tail. `queries` carries (qid, qtext,
-    * embedding): the embedding drives recall, the raw text rides to
-    * the reranker. Only `kCandidates` rows per query ever reach the
-    * expensive scorer — the cascade's contract at corpus scale. */
+    * ([[Rerank.rerankTopK]]), with [[retrieve]]'s context-assembly
+    * tail. `queries` carries (qid, qtext, embedding): the embedding
+    * drives recall, the raw text rides to the reranker. Only
+    * `kCandidates` rows per query ever reach the expensive scorer —
+    * the cascade's contract at corpus scale. */
   def retrieveReranked(index: DataFrame, queries: DataFrame,
       service: Rerank.RerankService, kCandidates: Int,
       k: Int): DataFrame = {
-    val cands = SimilaritySearch.bruteForceTopKHeap(
-        queries.select(col("qid"), col("embedding")), "qid",
-        index, "chunk_id", "embedding", kCandidates)
-      .withColumnRenamed("cid", "chunk_id")
+    val cands = hits(index, queries.select(col("qid"), col("embedding")),
+        kCandidates)
       .drop("rnk") // stage-1 rank; the reranker assigns the final one
-      .join(index.select(col("chunk_id"), col("chunk"),
-        col("source_file")), Seq("chunk_id"))
       .join(queries.select(col("qid"), col("qtext")), Seq("qid"))
-    val reranked = Rerank.rerankTopK(cands, "qid", "qtext",
-      "chunk_id", "chunk", service, k)
-    assembleContext(dedupHits(reranked))
+    assembleContext(Rerank.rerankTopK(cands, "qid", "qtext",
+      "chunk_id", "chunk", service, k))
   }
 
   /** [[retrieve]] over a COMPRESSED index scan: the int8-quantized
     * kernel ([[SimilaritySearch.quantizedTopK]], recall ≈ 0.99 on
     * the testdata embeddings — RecallBench) shortlists `rerank·k`
-    * chunks reading a quarter of the bytes, then only the shortlist
-    * re-joins float vectors for the exact cosine re-rank — so the
-    * context assembly downstream is bit-identical to [[retrieve]]
-    * whenever the true top-k survives the shortlist (RagSpec pins
-    * equality on the testdata corpus). At 100 TB this quarters the
-    * scan bandwidth of every retrieval. */
+    * chunk ids reading a quarter of the bytes, then only the
+    * shortlisted rows re-read their float vectors (with passage and
+    * file) for the exact cosine re-rank, ranked as [[retrieve]] ranks
+    * — so the context assembly downstream is bit-identical to
+    * [[retrieve]] whenever the true top-k survives the shortlist
+    * (RagSpec pins equality on the testdata corpus). At 100 TB this
+    * quarters the scan bandwidth of every retrieval. */
   def retrieveCompressed(index: DataFrame, queries: DataFrame, k: Int,
       rerank: Int = 10): DataFrame = {
     val shortlist = SimilaritySearch.quantizedTopK(
-      queries, "qid", index, "chunk_id", "embedding", k * rerank)
-    val hits = ProductQuantization.exactRerank(shortlist, queries,
-      "qid", index, "chunk_id", "embedding", k)
-      .withColumnRenamed("cid", "chunk_id")
-    val joined = hits.join(
-      index.select(col("chunk_id"), col("chunk"), col("source_file")),
-      Seq("chunk_id"))
-    assembleContext(dedupHits(joined))
+        queries, "qid", index, "chunk_id", "embedding", k * rerank)
+      .select(col("qid"), col("cid").as("chunk_id")).distinct()
+    val q = queries.filter(col("embedding").isNotNull)
+      .select(col("qid").cast("long").as("qid"), col("embedding").as("qvec"),
+        l2Norm(col("embedding")).as("qnorm"))
+    val scored = shortlist
+      .join(index.select("chunk_id", "source_file", "chunk", "embedding")
+        .filter(col("embedding").isNotNull), "chunk_id")
+      .join(broadcast(q), "qid")
+      .select(col("qid"), col("chunk_id"), col("source_file"), col("chunk"),
+        (dotF64(col("qvec"), col("embedding")) /
+          (col("qnorm") * l2Norm(col("embedding")))).as("score"))
+    assembleContext(graft.plans.CosineTopK.rank(scored, k,
+      Seq("chunk_id", "source_file", "chunk")))
   }
 }

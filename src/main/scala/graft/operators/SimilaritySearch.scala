@@ -10,17 +10,19 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType,
-  StructField, StructType}
+  StringType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 import graft.functions.VectorFunctions._
+import graft.plans.CosineTopK
 
 /** Similarity search over embedding columns (SURVEY §2.11 V3/T1 — the
   * reference's cosine top-k retrieval, `services/database.py:202-236`,
   * k=4 default `shared/defaults.py:88`).
   *
   * Scale design: the baseline is a block-partitioned brute-force scan —
-  * queries broadcast (small side), corpus stays partitioned, per-query
-  * top-k via ranked window on (query, score). The IVF variant prunes
+  * the query side packed once (small side), corpus stays partitioned,
+  * per-query top-k kept in bounded buffers per partition and merged
+  * behind one exchange on the query id. The IVF variant prunes
   * the corpus to the `nProbe` nearest coarse cells first, turning the
   * scan into a bucket-join — the 100 TB path.
   */
@@ -52,27 +54,52 @@ object SimilaritySearch {
       .select(col("qid"), col("cid"), col("score"), col("rnk"))
   }
 
-  /** [[bruteForceTopK]] with the bounded-heap aggregation shape
-    * ([[TopK]]): map-side per-partition top-k, shuffle of k rows per
-    * (partition, query) instead of the full scored cross product —
-    * the formulation that survives a 100 TB corpus, and the DEFAULT
-    * retrieval path (q31, `Rag.retrieve`, the hybrid dense leg).
-    * Long or string corpus ids; results are bit-identical to the
-    * window formulation (TopKSpec proves it), which remains as the
-    * oracle cross-check. */
+  /** Exact cosine top-k, the DEFAULT retrieval path (q31, the hybrid
+    * dense leg, `Graft.knn`): [[bruteForceTopKRows]] with no payload,
+    * → (qid LONG, cid, score DOUBLE, rnk INT). Results are
+    * bit-identical to the window formulation (TopKSpec proves it),
+    * which remains as the oracle cross-check. */
   def bruteForceTopKHeap(queries: DataFrame, queryIdCol: String,
       corpus: DataFrame, corpusIdCol: String, vecCol: String,
-      k: Int): DataFrame = {
-    val q = queries.select(col(queryIdCol).as("qid"),
-      col(vecCol).as("qvec"), l2Norm(col(vecCol)).as("qnorm"))
-    val c = graft.GraftSession.fanOutForCompute(
-      corpus.select(col(corpusIdCol).as("id"),
-        col(vecCol).as("cvec"), l2Norm(col(vecCol)).as("cnorm")))
-    val scored = c.crossJoin(broadcast(q))
-      .withColumn("score",
-        dotF64(col("qvec"), col("cvec")) / (col("qnorm") * col("cnorm")))
-      .select(col("qid"), col("id"), col("score"))
-    TopK.perQuery(scored, k)
+      k: Int): DataFrame =
+    bruteForceTopKRows(queries, queryIdCol, corpus, corpusIdCol, vecCol,
+      Nil, k)
+
+  /** Exact cosine top-k over corpus ROWS carrying `payload` columns:
+    * (qid LONG, cid, payload…, score DOUBLE, rnk INT), best first per
+    * query by (score desc, cid asc, then each payload column asc).
+    * A STRING corpus id stays a string; any other id is cast to LONG,
+    * as is the query id.
+    *
+    * Shape ([[graft.plans.CosineTopK]]): norms once per row in the
+    * projections, the query side packed once on the driver and
+    * carried by every scan task, one scoring pass per corpus
+    * partition that keeps ≤ k rows per query, and one exchange on qid
+    * that merges them. Rows with a NULL
+    * vector or a NULL query id are dropped first, as in the IVF paths:
+    * a NULL-vector corpus row is never a hit and a NULL-vector query
+    * returns no rows. */
+  def bruteForceTopKRows(queries: DataFrame, queryIdCol: String,
+      corpus: DataFrame, corpusIdCol: String, vecCol: String,
+      payload: Seq[String], k: Int): DataFrame = {
+    TopK.requirePositive("k" -> k)
+    val reserved = Seq("qid", "cid", "cvec", "cnorm", "score", "rnk")
+    require(payload.forall(p => !reserved.contains(p)),
+      s"payload columns may not be named ${reserved.mkString(", ")}")
+    val cid = corpus.schema(corpusIdCol).dataType match {
+      case StringType => col(corpusIdCol)
+      case _ => col(corpusIdCol).cast("long")
+    }
+    val q = queries.select(col(queryIdCol).cast("long").as("qid"),
+        col(vecCol).as("qvec"))
+      .filter(col("qid").isNotNull && col("qvec").isNotNull)
+      .select(col("qid"), col("qvec"), l2Norm(col("qvec")).as("qnorm"))
+    // fan the base columns out; the norm projects above the exchange
+    val c = graft.GraftSession.fanOutForCompute(corpus.select(
+        cid.as("cid") +: col(vecCol).as("cvec") +: payload.map(col): _*))
+      .select(col("cid") +: col("cvec") +: l2Norm(col("cvec")).as("cnorm") +:
+        payload.map(col): _*)
+    CosineTopK.rank(CosineTopK.scan(q, c, payload, k), k, "cid" +: payload)
   }
 
   /** All corpus pairs with cosine similarity above `threshold` — the
@@ -616,6 +643,18 @@ object SimilaritySearch {
       s"centroid table of cells = $cells, dim = $dim needs $bytes B " +
       s"(cells × (dim + 2) × 8), above the $MaxCellTableBytes B cap: " +
       "use fewer cells or a lower dimension")
+  }
+
+  /** The packed query-block guard of [[bruteForceTopKRows]]: the
+    * block every scan task carries, `rows × (dim + 2) × 8 B` (each
+    * query's doubles plus its id and norm), must not pass
+    * [[MaxCellTableBytes]]. */
+  private[graft] def requireQueryBlockFits(rows: Long, dim: Long): Unit = {
+    val bytes = BigInt(rows) * (BigInt(dim) + 2) * 8
+    require(bytes <= MaxCellTableBytes,
+      s"query block of rows = $rows, dim = $dim needs $bytes B " +
+      s"(rows × (dim + 2) × 8), above the $MaxCellTableBytes B cap: " +
+      "search with fewer queries at a time")
   }
 
   private val cellTableFits = udf { (cells: Long, dim: Int) =>

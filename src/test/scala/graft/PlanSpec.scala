@@ -193,4 +193,29 @@ class PlanSpec extends SparkTestBase {
       assert(!p.contains("Window"), s"$name plans a window:\n$p")
     }
   }
+
+  test("Rag.retrieve: one shuffle exchange, no window and no nested-loop " +
+      "join in its executed plan") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    // eight rows: the scan is already as wide as the session, so the
+    // search plans no fan-out exchange of its own
+    val index = (0 until 8).map(i => (s"c$i", s"passage: [DOC_0000000$i] t$i",
+        s"f${i % 3}.md", Array(i.toFloat, 1.0f)))
+      .toDF("chunk_id", "chunk", "source_file", "embedding")
+    val queries = Seq((1L, Array(1.0f, 0.5f)), (2L, Array(0.0f, 1.0f)))
+      .toDF("qid", "embedding")
+    val df = graft.operators.Rag.retrieve(index, queries, k = 3)
+    assert(df.collect().length === 2) // finalize the adaptive plan
+    val helper = new AdaptiveSparkPlanHelper {}
+    val p = df.queryExecution.executedPlan
+    def count(f: PartialFunction[org.apache.spark.sql.execution.SparkPlan,
+        Unit]) = helper.collect(p)(f.andThen(_ => 1)).size
+    assert(count { case _: ShuffleExchangeLike => } === 1, p.toString)
+    assert(count { case _: WindowExec => } === 0, p.toString)
+    assert(count { case _: BroadcastNestedLoopJoinExec => } === 0, p.toString)
+  }
 }

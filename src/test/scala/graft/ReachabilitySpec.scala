@@ -10,7 +10,8 @@ import scala.jdk.CollectionConverters._
   * is named somewhere else in the program (`src/main/scala`, or the
   * benchmark's `perfbench/src`), or is mapped by `COVERAGE.md`, whose
   * backticked names are the allowlist. A source scan, no Spark
-  * session: a name counts wherever it appears as a whole identifier. */
+  * session: a name counts wherever it appears as a whole identifier
+  * outside a comment. */
 class ReachabilitySpec extends SparkTestBase {
 
   test("every public operator def is reached by the program or " +
@@ -49,6 +50,37 @@ class ReachabilitySpec extends SparkTestBase {
         Seq("src/main/scala/graft/operators/A.scala:5 orphan"))
     }
   }
+
+  test("a name that appears only in comments is not a reference") {
+    withTempDir("reach") { root =>
+      def put(rel: String, text: String): Unit = {
+        val p = root.resolve(rel)
+        Files.createDirectories(p.getParent)
+        Files.writeString(p, text)
+      }
+      put("src/main/scala/graft/operators/A.scala",
+        """package graft.operators
+          |object A {
+          |  def used(x: Int): Int = x
+          |  def quoted(): Unit = ()
+          |  def commented(): Unit = ()
+          |}
+          |""".stripMargin)
+      put("src/main/scala/graft/B.scala",
+        """package graft
+          |/** Calls [[operators.A.commented]]. */
+          |object B {
+          |  // A.commented()
+          |  /* A.commented() /* nested */ A.commented() */
+          |  val u = "http://x"; val q = '"'; val n = A.used(1)
+          |  val s = "A.quoted() // in a string"
+          |}
+          |""".stripMargin)
+      put("COVERAGE.md", "")
+      assert(ReachabilitySpec.unreached(root) ===
+        Seq("src/main/scala/graft/operators/A.scala:5 commented"))
+    }
+  }
 }
 
 object ReachabilitySpec {
@@ -76,7 +108,8 @@ object ReachabilitySpec {
           .filter(_.toString.endsWith(".scala")).toList
         finally walk.close()
       }.sortBy(_.toString)
-    val lines = program.map(f => f -> Files.readString(f).split("\n")).toMap
+    val lines = program.map(f =>
+      f -> stripComments(Files.readString(f)).split("\n")).toMap
     val named = mutable.Map[String, Int]().withDefaultValue(0)
     for (ls <- lines.values; l <- ls; id <- Ident.findAllIn(l))
       named(id) += 1
@@ -92,6 +125,49 @@ object ReachabilitySpec {
       if named(name) == Ident.findAllIn(ls(i)).count(_ == name) &&
         !mapped(name)
     } yield s"${root.relativize(f)}:${i + 1} $name"
+  }
+
+  /** `text` with the characters of every comment blanked (line
+    * breaks kept, so line numbers hold). String and character
+    * literals are stepped over whole: a `//` inside a string starts
+    * no comment. Block comments nest, as Scala's do. */
+  def stripComments(text: String): String = {
+    val out = new StringBuilder(text)
+    val n = text.length
+    def blank(from: Int, to: Int): Unit =
+      for (j <- from until to if text(j) != '\n') out.setCharAt(j, ' ')
+    var i = 0
+    while (i < n) {
+      if (text.startsWith("//", i)) {
+        val end = text.indexOf('\n', i) match { case -1 => n; case e => e }
+        blank(i, end)
+        i = end
+      } else if (text.startsWith("/*", i)) {
+        var depth = 1
+        var j = i + 2
+        while (j < n && depth > 0) {
+          if (text.startsWith("/*", j)) { depth += 1; j += 2 }
+          else if (text.startsWith("*/", j)) { depth -= 1; j += 2 }
+          else j += 1
+        }
+        blank(i, j)
+        i = j
+      } else if (text.startsWith("\"\"\"", i)) {
+        var j = text.indexOf("\"\"\"", i + 3) match { case -1 => n; case e => e + 3 }
+        while (j < n && text(j) == '"') j += 1
+        i = j
+      } else if (text(i) == '"') {
+        var j = i + 1
+        while (j < n && text(j) != '"' && text(j) != '\n')
+          j += (if (text(j) == '\\') 2 else 1)
+        i = j + 1
+      } else if (text(i) == '\'' && i + 2 < n && text(i + 1) == '\\') {
+        i = text.indexOf('\'', i + 3) match { case -1 => n; case e => e + 1 }
+      } else if (text(i) == '\'' && i + 2 < n && text(i + 2) == '\'') {
+        i += 3
+      } else i += 1
+    }
+    out.toString
   }
 
   /** The name and 0-based line index of each public, non-override

@@ -127,13 +127,27 @@ class TextFunctionsSpec extends SparkTestBase {
     assert(isInvalidTextStr("статья на русском языке достаточной длины"))
   }
 
+  /** The column-expression shingle form, the reference the
+    * single-pass [[TextFunctions.wordShinglesFast]] UDF must equal. */
+  private def wordShingles(text: org.apache.spark.sql.Column,
+      n: Int): org.apache.spark.sql.Column = {
+    val t = tokens(text)
+    when(size(t) >= n,
+      transform(sequence(lit(0), size(t) - n),
+        i => concat_ws(" ", (1 to n).map(j => element_at(t, i + j)): _*)))
+      .otherwise(array().cast("array<string>"))
+  }
+
   test("wordShingles produces n-grams; short docs give empty") {
     import spark.implicits._
-    val r = Seq("a b c d", "a b").toDF("s")
-      .select(wordShingles(col("s"), 3))
+    val docs = Seq("a b c d", "a b", "x  y z", "").toDF("s")
+    val r = docs.select(wordShingles(col("s"), 3))
       .collect().map(_.getSeq[String](0))
     assert(r(0) === Seq("a b c", "b c d"))
     assert(r(1) === Seq.empty)
+    // the single-pass UDF the program uses gives the same arrays
+    assert(docs.select(wordShinglesFast(col("s"), 3))
+      .collect().map(_.getSeq[String](0)).toSeq === r.toSeq)
   }
 
   test("langIdHeuristic picks marker language") {

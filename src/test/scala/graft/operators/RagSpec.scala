@@ -59,6 +59,37 @@ class RagSpec extends SparkTestBase {
     assert(out(0).getAs[String]("context") === "[source1] apples and pears")
   }
 
+  test("a chunk id that two files share is one citation per kept hit") {
+    import spark.implicits._
+    // identical documents f1.md and f2.md share chunk c1 (same id, same
+    // passage, same vector); c2 is the next-best chunk
+    val index = Seq(
+      ("c1", "passage: [DOC_AAAAAAAA] apples and pears", "f2.md",
+        Array(1.0f, 0.0f)),
+      ("c1", "passage: [DOC_AAAAAAAA] apples and pears", "f1.md",
+        Array(1.0f, 0.0f)),
+      ("c2", "passage: [DOC_BBBBBBBB] trains and planes", "f3.md",
+        Array(0.6f, 0.8f)),
+      ("c3", "passage: [DOC_CCCCCCCC] suns and moons", "f4.md",
+        Array(0.0f, 1.0f)))
+      .toDF("chunk_id", "chunk", "source_file", "embedding")
+    val queries = Seq((7L, Array(1.0f, 0.1f))).toDF("qid", "embedding")
+    // the top 3 rows are c1@f1.md, c1@f2.md (a tie, broken on the
+    // file) and c2; the duplicate passage keeps its best rank only
+    val out = Rag.retrieve(index, queries, k = 3).collect()
+    assert(out.length === 1)
+    assert(out(0).getAs[Seq[String]]("sources") === Seq("f1.md", "f3.md"))
+    assert(out(0).getAs[String]("context") ===
+      "[source1] apples and pears\n---\n[source2] trains and planes")
+    val reranked = Rag.retrieveReranked(index,
+      Seq((7L, "q", Array(1.0f, 0.1f))).toDF("qid", "qtext", "embedding"),
+      new Rerank.RerankService {
+        def score(batch: Seq[(String, String)]): Seq[Double] =
+          batch.map(_ => 1.0)
+      }, kCandidates = 3, k = 3).collect()
+    assert(reranked(0).getAs[Seq[String]]("sources").size === 2)
+  }
+
   test("retrieveReranked: the precision stage re-orders recall's " +
       "candidates and the assembly tail stays intact") {
     import spark.implicits._
